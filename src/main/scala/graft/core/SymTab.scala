@@ -36,38 +36,53 @@ final class SymTab(val syms: Array[Array[Int]]) extends Serializable {
                                  val candOff: Array[Int], val cands: Array[Int])
 
   @transient private lazy val firstIndex: mutable.LongMap[FirstEntry] = {
-    val singles = mutable.LongMap.empty[Int]
-    val multis = mutable.LongMap.empty[mutable.LinkedHashMap[Int, mutable.ArrayBuffer[Int]]]
+    // codes sorted by first token, code order kept within a first token
+    val n = syms.length
+    val byFirst = new Array[Long](n)
     var c = 0
-    while (c < syms.length) {
-      val s = syms(c)
-      if (s.length == 1) {
-        if (!singles.contains(s(0).toLong)) singles(s(0).toLong) = c // lowest code wins
-      } else {
-        multis.getOrElseUpdate(s(0).toLong, mutable.LinkedHashMap.empty)
-          .getOrElseUpdate(s(1), mutable.ArrayBuffer.empty) += c
-      }
-      c += 1
-    }
+    while (c < n) { byFirst(c) = syms(c)(0).toLong << 8 | c; c += 1 }
+    java.util.Arrays.sort(byFirst)
     val out = mutable.LongMap.empty[FirstEntry]
-    (singles.keys ++ multis.keys).foreach { t0 =>
-      if (!out.contains(t0)) {
-        val single = singles.getOrElse(t0, -1)
-        multis.get(t0) match {
-          case None => out(t0) = new FirstEntry(single, null, null, null)
-          case Some(bySecond) =>
-            val seconds = bySecond.keys.toArray
-            val candOff = new Array[Int](seconds.length + 1)
-            val cands = mutable.ArrayBuffer.empty[Int]
-            var k = 0
-            while (k < seconds.length) {
-              cands ++= bySecond(seconds(k)).sortBy(cd => (-syms(cd).length, cd))
-              candOff(k + 1) = cands.length
-              k += 1
-            }
-            out(t0) = new FirstEntry(single, seconds, candOff, cands.toArray)
+    val seconds = new Array[Int](n)
+    // multi-token code of this first token: second-token group << 12 |
+    // (MaxSymbolLen − length) << 8 | code, so sorting orders each group
+    // longest-first, then lowest code
+    val packed = new Array[Int](n)
+    var i = 0
+    while (i < n) {
+      val t0 = byFirst(i) >> 8
+      var single = -1
+      var nSec = 0
+      var nMulti = 0
+      var j = i
+      while (j < n && (byFirst(j) >> 8) == t0) {
+        val code = (byFirst(j) & 0xff).toInt
+        val s = syms(code)
+        if (s.length == 1) { if (single < 0) single = code } // lowest code wins
+        else {
+          // second-token groups in first-seen order: low (frequent) codes scan first
+          var g = 0
+          while (g < nSec && seconds(g) != s(1)) g += 1
+          if (g == nSec) { seconds(nSec) = s(1); nSec += 1 }
+          packed(nMulti) = g << 12 | (SymTab.MaxSymbolLen - s.length) << 8 | code
+          nMulti += 1
         }
+        j += 1
       }
+      if (nMulti == 0) out(t0) = new FirstEntry(single, null, null, null)
+      else {
+        java.util.Arrays.sort(packed, 0, nMulti)
+        val candOff = new Array[Int](nSec + 1)
+        val cands = new Array[Int](nMulti)
+        var m = 0
+        while (m < nMulti) {
+          cands(m) = packed(m) & 0xff
+          candOff((packed(m) >>> 12) + 1) = m + 1
+          m += 1
+        }
+        out(t0) = new FirstEntry(single, java.util.Arrays.copyOf(seconds, nSec), candOff, cands)
+      }
+      i = j
     }
     out
   }

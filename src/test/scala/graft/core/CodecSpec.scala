@@ -104,6 +104,27 @@ class CodecSpec extends AnyFunSuite {
     assert(st2.contentHash == st.contentHash)
   }
 
+  test("symtab longest match equals a naive longest-then-lowest-code scan") {
+    val rnd = new Random(11)
+    for (_ <- 0 until 200) {
+      // small alphabet with duplicate symbols, so prefixes and ties abound
+      val syms = Array.fill(1 + rnd.nextInt(SymTab.MaxSymbols)) {
+        Array.fill(1 + rnd.nextInt(SymTab.MaxSymbolLen))(rnd.nextInt(6) - 3)
+      }
+      val st = new SymTab(syms)
+      val toks = Array.fill(40)(rnd.nextInt(7) - 3)
+      for (pos <- toks.indices; end <- Seq(toks.length, math.min(toks.length, pos + 1 + rnd.nextInt(4)))) {
+        var best = -1
+        for (c <- syms.indices) {
+          val s = syms(c)
+          if (pos + s.length <= end && s.indices.forall(j => toks(pos + j) == s(j)) &&
+              (best < 0 || s.length > syms(best).length)) best = c
+        }
+        assert(st.longestMatch(toks, pos, end) == best, s"pos $pos end $end")
+      }
+    }
+  }
+
   test("trainer compresses repetitive token streams well") {
     val rows = zipfRows(7, 500, 32000)
     val stats = ChunkStats.compute(rows)
