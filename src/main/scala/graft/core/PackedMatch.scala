@@ -199,15 +199,14 @@ object PackedAnchor {
   }
 
   /** Per-(chunk, pattern) matcher: codec header parsed once, bitpack phase
-    * images and range guards computed once, then [[evalRow]] per row slice.
-    * The chunk matcher builds one per chunk; the per-row expression caches
-    * one per header (HeaderCache in query.Expressions). `isFor = false`
-    * covers both bitpack (parts = token values) and dict (parts = dictionary
-    * indices via [[prepareDict]]) — base-0 packed streams at a
-    * chunk-constant width.
+    * images and range guards computed once, then one call per row slice
+    * ([[PatternMatch.prepare]] returns it as the chunk's row predicate).
+    * `isFor = false` covers both bitpack (parts = token values) and dict
+    * (parts = dictionary indices via [[prepareDict]]) — base-0 packed
+    * streams at a chunk-constant width.
     */
   final class Prepared(width: Int, isFor: Boolean, mode: String,
-                       parts: Array[Array[Int]]) {
+                       parts: Array[Array[Int]]) extends RowPredicate {
     private val rangeMask = if (width >= 32) 0xffffffffL else (1L << width) - 1
     private val sliding = mode == PatternMode.Contains || mode == PatternMode.MultiInfix
     // bitpack deltas ARE the pattern tokens: images row-independent
@@ -241,7 +240,7 @@ object PackedAnchor {
       out
     }
 
-    def evalRow(bytes: Array[Byte], from: Int, to: Int): Boolean = {
+    def apply(bytes: Array[Byte], from: Int, to: Int): Boolean = {
       if (!bpValid) return false
       val r = new ByteReader(bytes, from, to)
       val n = r.readVarUInt()
@@ -364,7 +363,7 @@ object PackedAnchor {
     */
   def eval(codecName: String, header: Array[Byte], bytes: Array[Byte],
            from: Int, to: Int, mode: String, parts: Array[Array[Int]]): Boolean =
-    prepare(codecName, header, mode, parts).evalRow(bytes, from, to)
+    prepare(codecName, header, mode, parts)(bytes, from, to)
 
   def eval(codecName: String, header: Array[Byte], bytes: Array[Byte],
            from: Int, to: Int, mode: String, part: Array[Int]): Boolean =

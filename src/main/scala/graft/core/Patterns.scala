@@ -306,3 +306,54 @@ object FsstMatch {
       case PatternMode.MultiInfix => multiInfix(bytes, from, to, pm)
     }
 }
+
+/** The pattern operator's one codec dispatch: each codec's rows match in its
+  * own compressed domain — FSST through the code DFA, every positional
+  * codec's equals through its canonical encoding, dict in the index domain,
+  * RLE per run, FoR/bitpack on the packed stream — and only raw rows (non-
+  * equals modes) decode first.
+  */
+object PatternMatch {
+
+  /** Token-bloom chunk gate: a chunk can match only if every pattern token
+    * may be present (blooms have no false negatives). */
+  def chunkMayMatch(bloom: Array[Byte], parts: Array[Array[Int]]): Boolean =
+    parts.forall(_.forall(ChunkStats.bloomHas(bloom, _)))
+
+  /** The pattern test for the rows of one chunk, codec chosen and header
+    * parsed once. `parts` must be normalized ([[PatternMode.normalize]]).
+    * `escapedBloom` is the chunk's escaped-token bloom, or null when the
+    * caller sees only the header (the per-row expressions), which skips the
+    * FSST spelling gate. Returns [[RowPredicate.Never]] only when the header
+    * or the escaped bloom proves that no row can match — exact, not
+    * probabilistic: a pattern token absent from a dict chunk's dictionary,
+    * an equals pattern the chunk's codec cannot encode, or a pattern no FSST
+    * code sequence can spell ([[PatternMachine.requiredCodeTable]] Left).
+    */
+  def prepare(codec: String, header: Array[Byte], mode: String,
+              parts: Array[Array[Int]], escapedBloom: Array[Byte]): RowPredicate =
+    if (codec == FsstTokenCodec.name) {
+      val pm = PatternMachine.forTable(EvalCaches.symtab(header), parts)
+      if (escapedBloom != null && pm.requiredCodeTable(escapedBloom).isLeft) RowPredicate.Never
+      else (d, f, t) => FsstMatch.eval(mode, pm, d, f, t)
+    } else if (mode == PatternMode.Equals) {
+      PackedEquals.patternImage(codec, header, parts(0)) match {
+        case None => RowPredicate.Never
+        case Some(img) => (d, f, t) => PackedEquals.rowEquals(d, f, t, img)
+      }
+    } else if (codec == DictCodec.name) {
+      DictMatch.translate(EvalCaches.dict(header), parts) match {
+        case None => RowPredicate.Never
+        case Some(idxParts) => PackedAnchor.prepareDict(header, mode, idxParts)
+      }
+    } else if (codec == RleCodec.name) {
+      val runs = parts.map(RleMatch.patternRuns)
+      val (pvs, pcs, lens) = (runs.map(_._1), runs.map(_._2), parts.map(_.length))
+      (d, f, t) => RleMatch.eval(mode, d, f, t, pvs, pcs, lens)
+    } else if (PackedAnchor.supports(codec, mode)) {
+      PackedAnchor.prepare(codec, header, mode, parts)
+    } else {
+      val dec = Codecs.byName(codec).decoder(header)
+      (d, f, t) => TokenMatch.eval(mode, parts, dec.decode(d, f, t))
+    }
+}

@@ -172,24 +172,34 @@ object RangeMatch {
     false
   }
 
-  /** Dispatch on codec name over one row's compressed bytes. `header` is
-    * the chunk header; parsing is the caller's chance to amortize (the
-    * expressions cache per header) — this convenience form re-derives per
-    * call and is for tests/fallbacks.
+  /** The range test for the rows of one chunk, codec chosen and header
+    * parsed once. Returns [[RowPredicate.Never]] only when the header proves
+    * that no row holds a token in [lo,hi] — exact, not probabilistic: a dict
+    * chunk whose dictionary has no value in range.
     */
-  def evalRow(codec: String, header: Array[Byte], bytes: Array[Byte],
-              from: Int, to: Int, lo: Int, hi: Int): Boolean = codec match {
-    case FsstTokenCodec.name =>
-      evalFsst(fsstCodeTable(SymTab.fromBytes(header), lo, hi), bytes, from, to, lo, hi)
-    case DictCodec.name =>
-      val dict = DictCodec.readDict(header)
-      val (iLo, iHi) = dictIndexRange(dict, lo, hi)
-      evalDict(bytes, from, to, BitPack.bitsFor(math.max(dict.length - 1, 0)), iLo, iHi)
-    case RleCodec.name => evalRle(bytes, from, to, lo, hi)
-    case BitPackCodec.name => evalBitpack(bytes, from, to, header(0) & 0xff, lo, hi)
-    case ForCodec.name => evalFor(bytes, from, to, header(0) & 0xff, lo, hi)
-    case RawCodec.name => evalRaw(bytes, from, to, lo, hi)
-    case other =>
-      evalDecoded(Codecs.byName(other).decoder(header).decode(bytes, from, to), lo, hi)
-  }
+  def prepare(codec: String, header: Array[Byte], lo: Int, hi: Int): RowPredicate =
+    codec match {
+      case FsstTokenCodec.name =>
+        val table = fsstCodeTable(EvalCaches.symtab(header), lo, hi)
+        (d, f, t) => evalFsst(table, d, f, t, lo, hi)
+      case DictCodec.name =>
+        val dict = EvalCaches.dict(header)
+        val (iLo, iHi) = dictIndexRange(dict, lo, hi)
+        if (iLo > iHi) RowPredicate.Never
+        else {
+          val width = BitPack.bitsFor(math.max(dict.length - 1, 0))
+          (d, f, t) => evalDict(d, f, t, width, iLo, iHi)
+        }
+      case RleCodec.name => (d, f, t) => evalRle(d, f, t, lo, hi)
+      case BitPackCodec.name =>
+        val width = header(0) & 0xff
+        (d, f, t) => evalBitpack(d, f, t, width, lo, hi)
+      case ForCodec.name =>
+        val width = header(0) & 0xff
+        (d, f, t) => evalFor(d, f, t, width, lo, hi)
+      case RawCodec.name => (d, f, t) => evalRaw(d, f, t, lo, hi)
+      case other =>
+        val dec = Codecs.byName(other).decoder(header)
+        (d, f, t) => evalDecoded(dec.decode(d, f, t), lo, hi)
+    }
 }

@@ -195,24 +195,34 @@ object SetMatch {
     false
   }
 
-  /** Per-row dispatch re-deriving header artifacts per call — tests and
-    * fallbacks only; the expressions cache per header. */
-  def evalRow(codec: String, header: Array[Byte], bytes: Array[Byte],
-              from: Int, to: Int, sorted: Array[Int]): Boolean = codec match {
-    case FsstTokenCodec.name =>
-      evalFsst(fsstCodeTable(SymTab.fromBytes(header), sorted), sorted, bytes, from, to)
-    case DictCodec.name =>
-      val dict = DictCodec.readDict(header)
-      dictIndexTable(dict, sorted) match {
-        case None => false
-        case Some(t) =>
-          evalDict(bytes, from, to, BitPack.bitsFor(math.max(dict.length - 1, 0)), t)
-      }
-    case RleCodec.name => evalRle(bytes, from, to, sorted)
-    case BitPackCodec.name => evalBitpack(bytes, from, to, header(0) & 0xff, sorted)
-    case ForCodec.name => evalFor(bytes, from, to, header(0) & 0xff, sorted)
-    case RawCodec.name => evalRaw(bytes, from, to, sorted)
-    case other =>
-      evalDecoded(Codecs.byName(other).decoder(header).decode(bytes, from, to), sorted)
-  }
+  /** The set test for the rows of one chunk, codec chosen and header parsed
+    * once. Returns [[RowPredicate.Never]] only when the header proves that
+    * no row holds a set token — exact, not probabilistic: a dict chunk whose
+    * dictionary holds no set element.
+    */
+  def prepare(codec: String, header: Array[Byte], sorted: Array[Int]): RowPredicate =
+    codec match {
+      case FsstTokenCodec.name =>
+        val table = fsstCodeTable(EvalCaches.symtab(header), sorted)
+        (d, f, t) => evalFsst(table, sorted, d, f, t)
+      case DictCodec.name =>
+        val dict = EvalCaches.dict(header)
+        dictIndexTable(dict, sorted) match {
+          case None => RowPredicate.Never
+          case Some(table) =>
+            val width = BitPack.bitsFor(math.max(dict.length - 1, 0))
+            (d, f, t) => evalDict(d, f, t, width, table)
+        }
+      case RleCodec.name => (d, f, t) => evalRle(d, f, t, sorted)
+      case BitPackCodec.name =>
+        val width = header(0) & 0xff
+        (d, f, t) => evalBitpack(d, f, t, width, sorted)
+      case ForCodec.name =>
+        val width = header(0) & 0xff
+        (d, f, t) => evalFor(d, f, t, width, sorted)
+      case RawCodec.name => (d, f, t) => evalRaw(d, f, t, sorted)
+      case other =>
+        val dec = Codecs.byName(other).decoder(header)
+        (d, f, t) => evalDecoded(dec.decode(d, f, t), sorted)
+    }
 }

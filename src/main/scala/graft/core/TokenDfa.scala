@@ -274,12 +274,12 @@ object PatternMachine {
       eq
     })
 
-  /** Cached per (symtab contentHash, expression identity) with a CONTENT
-    * check on hit — a hash/identity collision must never hand back a machine
-    * built for a different pattern or table (silent wrong matches).
+  /** Cached per (symtab contentHash, pattern hash) with a CONTENT check on
+    * hit — a hash collision must never hand back a machine built for a
+    * different pattern or table (silent wrong matches).
     */
-  def forTable(st: SymTab, patternId: Int, parts: Array[Array[Int]]): PatternMachine = {
-    val key = (st.contentHash, patternId)
+  def forTable(st: SymTab, parts: Array[Array[Int]]): PatternMachine = {
+    val key = (st.contentHash, java.util.Arrays.deepHashCode(parts.asInstanceOf[Array[AnyRef]]))
     val c = cache.get()
     var pm = c.get(key)
     if (pm == null || !sameParts(pm.parts, parts) || !sameTable(pm.st, st)) {

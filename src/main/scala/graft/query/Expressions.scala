@@ -10,46 +10,6 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-thread bounded cache keyed by header bytes (hash + content check —
-  * a hash collision must never return another header's artifact). One cache
-  * per artifact kind so per-row expression eval amortizes header parsing and
-  * DFA construction across a chunk's rows (the reference amortizes per
-  * 64Ki-row block: /root/reference/src/algos/Comet.hpp:26-38).
-  */
-private[query] final class HeaderCache[V](build: Array[Byte] => V, max: Int = 32) {
-  private val tl = new ThreadLocal[java.util.LinkedHashMap[Int, (Array[Byte], V)]] {
-    override def initialValue() =
-      new java.util.LinkedHashMap[Int, (Array[Byte], V)](64, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[Int, (Array[Byte], V)]) = size > max
-      }
-  }
-  def get(header: Array[Byte]): V = {
-    val key = java.util.Arrays.hashCode(header)
-    val c = tl.get()
-    val hit = c.get(key)
-    if (hit != null && java.util.Arrays.equals(hit._1, header)) hit._2
-    else {
-      val v = build(header)
-      c.put(key, (header, v))
-      v
-    }
-  }
-}
-
-private[query] object EvalCaches {
-  private val symtabs = new HeaderCache[SymTab](SymTab.fromBytes)
-  private val dicts = new HeaderCache[Array[Int]](DictCodec.readDict)
-  private val decodersByCodec =
-    scala.collection.concurrent.TrieMap.empty[String, HeaderCache[RowDecoder]]
-
-  def symtab(header: Array[Byte]): SymTab = symtabs.get(header)
-  /** Sorted dictionary values from a dict-codec header. */
-  def dict(header: Array[Byte]): Array[Int] = dicts.get(header)
-  def decoder(codec: String, header: Array[Byte]): RowDecoder =
-    decodersByCodec.getOrElseUpdate(codec,
-      new HeaderCache[RowDecoder](Codecs.byName(codec).decoder)).get(header)
-}
-
 /** decode_row(enc, header, codec) → array<int>: decodes one encoded row.
   * This is the decode boundary the optimizer rule pushes predicates through
   * (SURVEY.md §4 O2).
@@ -64,7 +24,7 @@ case class DecodeRow(enc: Expression, header: Expression, codecName: Expression)
   override def prettyName: String = "decode_row"
 
   def decodeOne(e: Array[Byte], h: Array[Byte], c: UTF8String): ArrayData = {
-    val dec = EvalCaches.decoder(c.toString, h)
+    val dec = EvalCaches.decoder(c, h)
     // UnsafeArrayData.fromPrimitiveArray = one memcpy; GenericArrayData(int[])
     // boxes every element AND forces the row writer into an element loop
     UnsafeArrayData.fromPrimitiveArray(dec.decode(e, 0, e.length))
@@ -102,15 +62,10 @@ case class DecodeHead(enc: Expression, header: Expression, codecName: Expression
   override def prettyName: String = "decode_head"
 
   // head decoder per (codec, header): header parsed once per chunk
-  @transient private lazy val decoders =
-    scala.collection.concurrent.TrieMap.empty[String, HeaderCache[HeadRowDecoder]]
+  @transient private lazy val decoders = new HeaderCache[HeadRowDecoder](HeadDecode.decoder)
 
-  def decodeOne(e: Array[Byte], h: Array[Byte], c: UTF8String): ArrayData = {
-    val codec = c.toString
-    val dec = decoders.getOrElseUpdate(codec,
-      new HeaderCache[HeadRowDecoder](hh => HeadDecode.decoder(codec, hh))).get(h)
-    UnsafeArrayData.fromPrimitiveArray(dec.decodeHead(e, 0, e.length, k))
-  }
+  def decodeOne(e: Array[Byte], h: Array[Byte], c: UTF8String): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(decoders.get(c, h).decodeHead(e, 0, e.length, k))
 
   override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
     decodeOne(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]],
@@ -142,15 +97,10 @@ case class DecodeTail(enc: Expression, header: Expression, codecName: Expression
   override def nullable: Boolean = enc.nullable || header.nullable || codecName.nullable
   override def prettyName: String = "decode_tail"
 
-  @transient private lazy val decoders =
-    scala.collection.concurrent.TrieMap.empty[String, HeaderCache[TailRowDecoder]]
+  @transient private lazy val decoders = new HeaderCache[TailRowDecoder](TailDecode.decoder)
 
-  def decodeOne(e: Array[Byte], h: Array[Byte], c: UTF8String): ArrayData = {
-    val codec = c.toString
-    val dec = decoders.getOrElseUpdate(codec,
-      new HeaderCache[TailRowDecoder](hh => TailDecode.decoder(codec, hh))).get(h)
-    UnsafeArrayData.fromPrimitiveArray(dec.decodeTail(e, 0, e.length, k))
-  }
+  def decodeOne(e: Array[Byte], h: Array[Byte], c: UTF8String): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(decoders.get(c, h).decodeTail(e, 0, e.length, k))
 
   override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
     decodeOne(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]],
@@ -184,15 +134,10 @@ case class DecodeSlice(enc: Expression, header: Expression, codecName: Expressio
   override def nullable: Boolean = enc.nullable || header.nullable || codecName.nullable
   override def prettyName: String = "decode_slice"
 
-  @transient private lazy val decoders =
-    scala.collection.concurrent.TrieMap.empty[String, HeaderCache[SliceRowDecoder]]
+  @transient private lazy val decoders = new HeaderCache[SliceRowDecoder](SliceDecode.decoder)
 
-  def decodeOne(e: Array[Byte], h: Array[Byte], c: UTF8String): ArrayData = {
-    val codec = c.toString
-    val dec = decoders.getOrElseUpdate(codec,
-      new HeaderCache[SliceRowDecoder](hh => SliceDecode.decoder(codec, hh))).get(h)
-    UnsafeArrayData.fromPrimitiveArray(dec.decodeSlice(e, 0, e.length, s, k))
-  }
+  def decodeOne(e: Array[Byte], h: Array[Byte], c: UTF8String): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(decoders.get(c, h).decodeSlice(e, 0, e.length, s, k))
 
   override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
     decodeOne(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]],
@@ -236,86 +181,48 @@ case class TokenPatternMatch(child: Expression, mode: String, parts: Seq[Seq[Int
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** Pattern predicate evaluated directly on compressed row bytes — the
-  * engine's raison d'être (the reference's compressed-domain LIKE,
-  * /root/reference/src/algos/Comet.hpp:63-96). FSST chunks run the
-  * lookup-KMP machinery without decoding; other codecs decode-then-match
-  * (they're positional codes, not substitution codes).
+/** A predicate on one encoded row: (enc, header, codec) → boolean through
+  * the operator's `prepare`, whose row predicate is cached per (codec,
+  * header) — one cache probe per row, then the kernel.
   */
-case class CompressedPatternMatch(enc: Expression, header: Expression, codecName: Expression,
-                                  mode: String, parts: Seq[Seq[Int]])
-    extends TernaryExpression {
-  private val partsArr: Array[Array[Int]] =
-    PatternMode.normalize(mode, parts.map(_.toArray).toArray)
-  private val patternId = System.identityHashCode(this)
-  // pattern as maximal runs (RLE-domain matching) — pattern constants
-  @transient private lazy val patRuns: (Array[Array[Int]], Array[Array[Int]], Array[Int]) = {
-    val rs = partsArr.map(RleMatch.patternRuns)
-    (rs.map(_._1), rs.map(_._2), partsArr.map(_.length))
-  }
-  // token→index translation + index-domain packed matcher memoized per dict
-  // header (evaluated per row); None = a pattern token is outside the
-  // dictionary, an exact whole-chunk gate
-  @transient private lazy val dictPrepared =
-    new HeaderCache[Option[PackedAnchor.Prepared]](h =>
-      DictMatch.translate(EvalCaches.dict(h), partsArr)
-        .map(idxParts => PackedAnchor.prepareDict(h, mode, idxParts)))
-  // equals-mode pattern image per (codec, header) — canonical-encoding E5
-  @transient private lazy val equalsImages =
-    scala.collection.concurrent.TrieMap.empty[String, HeaderCache[Option[Array[Byte]]]]
-  // FoR/bitpack packed-domain matcher per (codec, header) — phase images and
-  // range guards are built once per chunk header, not per row
-  @transient private lazy val packedPrepared =
-    scala.collection.concurrent.TrieMap.empty[String, HeaderCache[PackedAnchor.Prepared]]
+abstract class CompressedRowMatch extends TernaryExpression {
+  def enc: Expression
+  def header: Expression
+  def codecName: Expression
+  def prepare(codec: String, header: Array[Byte]): RowPredicate
+
+  @transient private lazy val predicates = new HeaderCache[RowPredicate](prepare)
   override def first: Expression = enc
   override def second: Expression = header
   override def third: Expression = codecName
   override def dataType: DataType = BooleanType
-  override def prettyName: String = s"compressed_match_$mode"
 
-  def matches(bytes: Array[Byte], headerBytes: Array[Byte], codecU: UTF8String): Boolean = {
-    val codec = codecU.toString
-    if (codec == FsstTokenCodec.name) {
-      val st = EvalCaches.symtab(headerBytes)
-      val pm = PatternMachine.forTable(st, patternId, partsArr)
-      FsstMatch.eval(mode, pm, bytes, 0, bytes.length)
-    } else if (mode == PatternMode.Equals) {
-      // canonical-encoding equality (E5): one byte compare per row
-      equalsImages.getOrElseUpdate(codec,
-        new HeaderCache[Option[Array[Byte]]](
-          h => PackedEquals.patternImage(codec, h, partsArr(0))))
-        .get(headerBytes) match {
-        case None => false
-        case Some(img) => PackedEquals.rowEquals(bytes, 0, bytes.length, img)
-      }
-    } else if (codec == DictCodec.name) {
-      dictPrepared.get(headerBytes) match {
-        case None => false // a pattern token is outside this chunk's dictionary
-        case Some(prep) => prep.evalRow(bytes, 0, bytes.length)
-      }
-    } else if (codec == RleCodec.name) {
-      val (pvs, pcs, lens) = patRuns
-      RleMatch.eval(mode, bytes, 0, bytes.length, pvs, pcs, lens)
-    } else if (PackedAnchor.supports(codec, mode)) {
-      packedPrepared.getOrElseUpdate(codec,
-        new HeaderCache[PackedAnchor.Prepared](
-          h => PackedAnchor.prepare(codec, h, mode, partsArr)))
-        .get(headerBytes).evalRow(bytes, 0, bytes.length)
-    } else {
-      val dec = EvalCaches.decoder(codec, headerBytes)
-      TokenMatch.eval(mode, partsArr, dec.decode(bytes, 0, bytes.length))
-    }
-  }
+  def matches(bytes: Array[Byte], headerBytes: Array[Byte], codec: UTF8String): Boolean =
+    predicates.get(codec, headerBytes)(bytes, 0, bytes.length)
 
   override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
     matches(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]], c.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
                                    ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("compressedPatternMatch", this, classOf[CompressedPatternMatch].getName)
+    val ref = ctx.addReferenceObj("compressedRowMatch", this, classOf[CompressedRowMatch].getName)
     nullSafeCodeGen(ctx, ev, (e, h, c) => s"${ev.value} = $ref.matches($e, $h, $c);")
   }
+}
 
+/** Pattern predicate evaluated directly on compressed row bytes — the
+  * engine's raison d'être: each codec's rows match in its own compressed
+  * domain ([[graft.core.PatternMatch.prepare]]), one row predicate cached
+  * per (codec, chunk header).
+  */
+case class CompressedPatternMatch(enc: Expression, header: Expression, codecName: Expression,
+                                  mode: String, parts: Seq[Seq[Int]])
+    extends CompressedRowMatch {
+  private val partsArr: Array[Array[Int]] =
+    PatternMode.normalize(mode, parts.map(_.toArray).toArray)
+  override def prettyName: String = s"compressed_match_$mode"
+  override def prepare(codec: String, header: Array[Byte]): RowPredicate =
+    PatternMatch.prepare(codec, header, mode, partsArr, escapedBloom = null)
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
     copy(enc = f, header = s, codecName = t)
 }
@@ -346,83 +253,49 @@ case class TokenRangeMatch(child: Expression, lo: Int, hi: Int)
 }
 
 /** Range predicate evaluated directly on compressed row bytes, per codec —
-  * see [[graft.core.RangeMatch]] for the kernel inventory. Per-header
-  * artifacts (fsst code table, dict index interval) are cached so per-row
-  * eval pays one table load per code byte / one packed compare per value.
+  * see [[graft.core.RangeMatch]] for the kernel inventory.
   */
 case class CompressedRangeMatch(enc: Expression, header: Expression, codecName: Expression,
                                 lo: Int, hi: Int)
-    extends TernaryExpression {
-  @transient private lazy val fsstTables =
-    new HeaderCache[Array[Boolean]](h => RangeMatch.fsstCodeTable(EvalCaches.symtab(h), lo, hi))
-  // (iLo, iHi, packed width) of the dict's qualifying index interval
-  @transient private lazy val dictRanges =
-    new HeaderCache[(Int, Int, Int)]({ h =>
-      val dict = EvalCaches.dict(h)
-      val (iLo, iHi) = RangeMatch.dictIndexRange(dict, lo, hi)
-      (iLo, iHi, BitPack.bitsFor(math.max(dict.length - 1, 0)))
-    })
-  override def first: Expression = enc
-  override def second: Expression = header
-  override def third: Expression = codecName
-  override def dataType: DataType = BooleanType
+    extends CompressedRowMatch {
   override def prettyName: String = "compressed_range_match"
-
-  def matches(bytes: Array[Byte], headerBytes: Array[Byte], codecU: UTF8String): Boolean = {
-    val codec = codecU.toString
-    codec match {
-      case FsstTokenCodec.name =>
-        RangeMatch.evalFsst(fsstTables.get(headerBytes), bytes, 0, bytes.length, lo, hi)
-      case DictCodec.name =>
-        val (iLo, iHi, width) = dictRanges.get(headerBytes)
-        iLo <= iHi && RangeMatch.evalDict(bytes, 0, bytes.length, width, iLo, iHi)
-      case RleCodec.name => RangeMatch.evalRle(bytes, 0, bytes.length, lo, hi)
-      case BitPackCodec.name =>
-        RangeMatch.evalBitpack(bytes, 0, bytes.length, headerBytes(0) & 0xff, lo, hi)
-      case ForCodec.name =>
-        RangeMatch.evalFor(bytes, 0, bytes.length, headerBytes(0) & 0xff, lo, hi)
-      case RawCodec.name => RangeMatch.evalRaw(bytes, 0, bytes.length, lo, hi)
-      case other =>
-        RangeMatch.evalDecoded(
-          EvalCaches.decoder(other, headerBytes).decode(bytes, 0, bytes.length), lo, hi)
-    }
-  }
-
-  override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
-    matches(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]], c.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("compressedRangeMatch", this, classOf[CompressedRangeMatch].getName)
-    nullSafeCodeGen(ctx, ev, (e, h, c) => s"${ev.value} = $ref.matches($e, $h, $c);")
-  }
-
+  override def prepare(codec: String, header: Array[Byte]): RowPredicate =
+    RangeMatch.prepare(codec, header, lo, hi)
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
     copy(enc = f, header = s, codecName = t)
 }
 
-/** Chunk-granularity range scan: zone-map gate on the chunk's min/max token
-  * (the token analog of parquet min/max pruning — a disjoint chunk is
-  * skipped without touching `data`), then the per-codec compressed-domain
-  * kernels over all rows, returning matching doc_ids.
+object ChunkDocIds {
+  /** The children every chunk scan takes, in order. */
+  val columns: Seq[String] = Seq("doc_ids", "data", "offsets", "row_count", "symtab", "codec",
+    "stats.min_tok", "stats.max_tok", "stats.symbol_bitmap", "stats.escaped_bitmap")
+}
+
+/** Chunk-granularity scan: one eval per CHUNK row runs the operator's row
+  * predicate over all of the chunk's rows and returns the matching doc_ids —
+  * the header is parsed and the kernel chosen once per chunk (the direct
+  * analog of Engine::Scan filling a row-id vector). Subclasses supply only
+  * their chunk gate and `prepare` call.
   */
-case class ChunkRangeDocIds(children: Seq[Expression], lo: Int, hi: Int)
-    extends Expression {
-  // children: doc_ids, data, offsets, row_count, symtab, codec, min_tok, max_tok
+abstract class ChunkDocIds extends Expression {
+  // children: ChunkDocIds.columns
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = false
-  override def prettyName: String = "chunk_range"
 
+  /** The chunk's row predicate; [[RowPredicate.Never]] skips the chunk. */
+  def predicate(codec: String, header: Array[Byte], minTok: Int, maxTok: Int,
+                bloom: Array[Byte], escaped: Array[Byte]): RowPredicate
+
+  // One eval per CHUNK row, but keeping it codegen'd keeps the enclosing
+  // scan + Generate inside a single WholeStageCodegen stage.
   override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
                                    ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("chunkRange", this, classOf[ChunkRangeDocIds].getName)
+    val ref = ctx.addReferenceObj("chunkDocIds", this, classOf[ChunkDocIds].getName)
     val evals = children.map(_.genCode(ctx))
     val anyNull = evals.map(_.isNull).mkString(" || ")
-    val args = Seq(
-      s"(byte[]) ${evals(0).value}", s"(byte[]) ${evals(1).value}",
-      s"(byte[]) ${evals(2).value}", s"(int) ${evals(3).value}",
-      s"(byte[]) ${evals(4).value}", s"(org.apache.spark.unsafe.types.UTF8String) ${evals(5).value}",
-      s"(int) ${evals(6).value}", s"(int) ${evals(7).value}").mkString(", ")
+    val types = Seq("byte[]", "byte[]", "byte[]", "int", "byte[]",
+      "org.apache.spark.unsafe.types.UTF8String", "int", "int", "byte[]", "byte[]")
+    val args = types.zip(evals).map { case (t, e) => s"($t) ${e.value}" }.mkString(", ")
     val code =
       code"""
         ${evals.map(_.code).mkString("\n")}
@@ -436,8 +309,7 @@ case class ChunkRangeDocIds(children: Seq[Expression], lo: Int, hi: Int)
     ev.copy(code = code, isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
   }
 
-  def emptyResult(): org.apache.spark.sql.catalyst.util.ArrayData =
-    new GenericArrayData(Array.empty[Any])
+  def emptyResult(): ArrayData = new GenericArrayData(Array.empty[Any])
 
   override def eval(input: InternalRow): Any = {
     val vals = children.map(_.eval(input))
@@ -445,53 +317,41 @@ case class ChunkRangeDocIds(children: Seq[Expression], lo: Int, hi: Int)
     else matchChunk(vals(0).asInstanceOf[Array[Byte]], vals(1).asInstanceOf[Array[Byte]],
       vals(2).asInstanceOf[Array[Byte]], vals(3).asInstanceOf[Int],
       vals(4).asInstanceOf[Array[Byte]], vals(5).asInstanceOf[UTF8String],
-      vals(6).asInstanceOf[Int], vals(7).asInstanceOf[Int])
+      vals(6).asInstanceOf[Int], vals(7).asInstanceOf[Int],
+      vals(8).asInstanceOf[Array[Byte]], vals(9).asInstanceOf[Array[Byte]])
   }
 
   def matchChunk(packedIds: Array[Byte], data: Array[Byte], offBytes: Array[Byte],
-                 rowCount: Int, header: Array[Byte], codecU: UTF8String,
-                 minTok: Int, maxTok: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    if (!RangeMatch.chunkOverlaps(minTok, maxTok, lo, hi))
-      return new GenericArrayData(Array.empty[Any]) // zone-map prune
-    val codec = codecU.toString
+                 rowCount: Int, header: Array[Byte], codec: UTF8String,
+                 minTok: Int, maxTok: Int, bloom: Array[Byte], escaped: Array[Byte]): ArrayData = {
+    val rowMatch = predicate(codec.toString, header, minTok, maxTok, bloom, escaped)
+    if (rowMatch eq RowPredicate.Never) return emptyResult()
     val offs = Offsets.unpack(offBytes, rowCount)
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val idCursor = new graft.core.ByteReader(packedIds, 0, packedIds.length)
-    @inline def nextId(matched: Boolean): Unit = {
-      val len = idCursor.readVarUInt()
-      if (matched) out += UTF8String.fromBytes(packedIds, idCursor.pos, len)
-      idCursor.pos += len
-    }
-    val rowEval: (Int, Int) => Boolean = codec match {
-      case FsstTokenCodec.name =>
-        val table = RangeMatch.fsstCodeTable(EvalCaches.symtab(header), lo, hi)
-        (f, t) => RangeMatch.evalFsst(table, data, f, t, lo, hi)
-      case DictCodec.name =>
-        val dict = EvalCaches.dict(header)
-        val (iLo, iHi) = RangeMatch.dictIndexRange(dict, lo, hi)
-        if (iLo > iHi) return new GenericArrayData(Array.empty[Any]) // exact gate
-        val width = BitPack.bitsFor(math.max(dict.length - 1, 0))
-        (f, t) => RangeMatch.evalDict(data, f, t, width, iLo, iHi)
-      case RleCodec.name => (f, t) => RangeMatch.evalRle(data, f, t, lo, hi)
-      case BitPackCodec.name =>
-        val width = header(0) & 0xff
-        (f, t) => RangeMatch.evalBitpack(data, f, t, width, lo, hi)
-      case ForCodec.name =>
-        val width = header(0) & 0xff
-        (f, t) => RangeMatch.evalFor(data, f, t, width, lo, hi)
-      case RawCodec.name => (f, t) => RangeMatch.evalRaw(data, f, t, lo, hi)
-      case other =>
-        val dec = EvalCaches.decoder(other, header)
-        (f, t) => RangeMatch.evalDecoded(dec.decode(data, f, t), lo, hi)
-    }
+    val idCursor = new ByteReader(packedIds, 0, packedIds.length)
     var i = 0
     while (i < rowCount) {
-      nextId(rowEval(offs(i), offs(i + 1)))
+      val len = idCursor.readVarUInt()
+      if (rowMatch(data, offs(i), offs(i + 1))) out += UTF8String.fromBytes(packedIds, idCursor.pos, len)
+      idCursor.pos += len
       i += 1
     }
     new GenericArrayData(out.toArray)
   }
+}
 
+/** Chunk-granularity range scan: zone-map gate on the chunk's min/max token
+  * (the token analog of parquet min/max pruning — a disjoint chunk is
+  * skipped without touching `data`), then the compressed-domain kernel over
+  * all rows.
+  */
+case class ChunkRangeDocIds(children: Seq[Expression], lo: Int, hi: Int)
+    extends ChunkDocIds {
+  override def prettyName: String = "chunk_range"
+  override def predicate(codec: String, header: Array[Byte], minTok: Int, maxTok: Int,
+                         bloom: Array[Byte], escaped: Array[Byte]): RowPredicate =
+    if (!RangeMatch.chunkOverlaps(minTok, maxTok, lo, hi)) RowPredicate.Never
+    else RangeMatch.prepare(codec, header, lo, hi)
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
     copy(children = cs)
 }
@@ -558,58 +418,15 @@ case class TokenSetMatch(child: Expression, tokens: Seq[Int])
 }
 
 /** Set-membership predicate on compressed row bytes — see
-  * [[graft.core.SetMatch]] for the per-codec kernels. Header artifacts
-  * (fsst code table, dict index table) cached per chunk header.
+  * [[graft.core.SetMatch]] for the per-codec kernels.
   */
 case class CompressedSetMatch(enc: Expression, header: Expression, codecName: Expression,
                               tokens: Seq[Int])
-    extends TernaryExpression {
+    extends CompressedRowMatch {
   private val sorted: Array[Int] = SetMatch.sortedSet(tokens.toArray)
-  @transient private lazy val fsstTables =
-    new HeaderCache[Array[Boolean]](h => SetMatch.fsstCodeTable(EvalCaches.symtab(h), sorted))
-  @transient private lazy val dictTables =
-    new HeaderCache[Option[(Array[Boolean], Int)]]({ h =>
-      val dict = EvalCaches.dict(h)
-      SetMatch.dictIndexTable(dict, sorted)
-        .map(t => (t, BitPack.bitsFor(math.max(dict.length - 1, 0))))
-    })
-  override def first: Expression = enc
-  override def second: Expression = header
-  override def third: Expression = codecName
-  override def dataType: DataType = BooleanType
   override def prettyName: String = "compressed_set_match"
-
-  def matches(bytes: Array[Byte], headerBytes: Array[Byte], codecU: UTF8String): Boolean = {
-    val codec = codecU.toString
-    codec match {
-      case FsstTokenCodec.name =>
-        SetMatch.evalFsst(fsstTables.get(headerBytes), sorted, bytes, 0, bytes.length)
-      case DictCodec.name =>
-        dictTables.get(headerBytes) match {
-          case None => false
-          case Some((t, width)) => SetMatch.evalDict(bytes, 0, bytes.length, width, t)
-        }
-      case RleCodec.name => SetMatch.evalRle(bytes, 0, bytes.length, sorted)
-      case BitPackCodec.name =>
-        SetMatch.evalBitpack(bytes, 0, bytes.length, headerBytes(0) & 0xff, sorted)
-      case ForCodec.name =>
-        SetMatch.evalFor(bytes, 0, bytes.length, headerBytes(0) & 0xff, sorted)
-      case RawCodec.name => SetMatch.evalRaw(bytes, 0, bytes.length, sorted)
-      case other =>
-        SetMatch.evalDecoded(
-          EvalCaches.decoder(other, headerBytes).decode(bytes, 0, bytes.length), sorted)
-    }
-  }
-
-  override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
-    matches(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]], c.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("compressedSetMatch", this, classOf[CompressedSetMatch].getName)
-    nullSafeCodeGen(ctx, ev, (e, h, c) => s"${ev.value} = $ref.matches($e, $h, $c);")
-  }
-
+  override def prepare(codec: String, header: Array[Byte]): RowPredicate =
+    SetMatch.prepare(codec, header, sorted)
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
     copy(enc = f, header = s, codecName = t)
 }
@@ -617,256 +434,37 @@ case class CompressedSetMatch(enc: Expression, header: Expression, codecName: Ex
 /** Chunk-granularity set scan with BOTH gates: zone map (set disjoint from
   * the chunk's [min,max] token) and the token bloom (no set element
   * may-present) — the ANY-semantics dual of the pattern scan's
-  * ALL-tokens-required gate — then the per-codec kernels over all rows.
+  * ALL-tokens-required gate — then the compressed-domain kernel over all
+  * rows.
   */
 case class ChunkSetDocIds(children: Seq[Expression], tokens: Seq[Int])
-    extends Expression {
-  // children: doc_ids, data, offsets, row_count, symtab, codec, min_tok, max_tok, bloom
+    extends ChunkDocIds {
   private val sorted: Array[Int] = SetMatch.sortedSet(tokens.toArray)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "chunk_set"
-
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("chunkSet", this, classOf[ChunkSetDocIds].getName)
-    val evals = children.map(_.genCode(ctx))
-    val anyNull = evals.map(_.isNull).mkString(" || ")
-    val args = Seq(
-      s"(byte[]) ${evals(0).value}", s"(byte[]) ${evals(1).value}",
-      s"(byte[]) ${evals(2).value}", s"(int) ${evals(3).value}",
-      s"(byte[]) ${evals(4).value}", s"(org.apache.spark.unsafe.types.UTF8String) ${evals(5).value}",
-      s"(int) ${evals(6).value}", s"(int) ${evals(7).value}",
-      s"(byte[]) ${evals(8).value}").mkString(", ")
-    val code =
-      code"""
-        ${evals.map(_.code).mkString("\n")}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if ($anyNull) {
-          ${ev.value} = $ref.emptyResult();
-        } else {
-          ${ev.value} = $ref.matchChunk($args);
-        }
-      """
-    ev.copy(code = code, isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  def emptyResult(): org.apache.spark.sql.catalyst.util.ArrayData =
-    new GenericArrayData(Array.empty[Any])
-
-  override def eval(input: InternalRow): Any = {
-    val vals = children.map(_.eval(input))
-    if (vals.contains(null)) emptyResult()
-    else matchChunk(vals(0).asInstanceOf[Array[Byte]], vals(1).asInstanceOf[Array[Byte]],
-      vals(2).asInstanceOf[Array[Byte]], vals(3).asInstanceOf[Int],
-      vals(4).asInstanceOf[Array[Byte]], vals(5).asInstanceOf[UTF8String],
-      vals(6).asInstanceOf[Int], vals(7).asInstanceOf[Int],
-      vals(8).asInstanceOf[Array[Byte]])
-  }
-
-  def matchChunk(packedIds: Array[Byte], data: Array[Byte], offBytes: Array[Byte],
-                 rowCount: Int, header: Array[Byte], codecU: UTF8String,
-                 minTok: Int, maxTok: Int, bloom: Array[Byte]): org.apache.spark.sql.catalyst.util.ArrayData = {
+  override def predicate(codec: String, header: Array[Byte], minTok: Int, maxTok: Int,
+                         bloom: Array[Byte], escaped: Array[Byte]): RowPredicate =
     if (!SetMatch.chunkOverlaps(sorted, minTok, maxTok) ||
-        !SetMatch.chunkMayContainAny(bloom, sorted))
-      return new GenericArrayData(Array.empty[Any])
-    val codec = codecU.toString
-    val offs = Offsets.unpack(offBytes, rowCount)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val idCursor = new graft.core.ByteReader(packedIds, 0, packedIds.length)
-    @inline def nextId(matched: Boolean): Unit = {
-      val len = idCursor.readVarUInt()
-      if (matched) out += UTF8String.fromBytes(packedIds, idCursor.pos, len)
-      idCursor.pos += len
-    }
-    val rowEval: (Int, Int) => Boolean = codec match {
-      case FsstTokenCodec.name =>
-        val table = SetMatch.fsstCodeTable(EvalCaches.symtab(header), sorted)
-        (f, t) => SetMatch.evalFsst(table, sorted, data, f, t)
-      case DictCodec.name =>
-        SetMatch.dictIndexTable(EvalCaches.dict(header), sorted) match {
-          case None => return new GenericArrayData(Array.empty[Any]) // exact gate
-          case Some(table) =>
-            val width = BitPack.bitsFor(math.max(EvalCaches.dict(header).length - 1, 0))
-            (f, t) => SetMatch.evalDict(data, f, t, width, table)
-        }
-      case RleCodec.name => (f, t) => SetMatch.evalRle(data, f, t, sorted)
-      case BitPackCodec.name =>
-        val width = header(0) & 0xff
-        (f, t) => SetMatch.evalBitpack(data, f, t, width, sorted)
-      case ForCodec.name =>
-        val width = header(0) & 0xff
-        (f, t) => SetMatch.evalFor(data, f, t, width, sorted)
-      case RawCodec.name => (f, t) => SetMatch.evalRaw(data, f, t, sorted)
-      case other =>
-        val dec = EvalCaches.decoder(other, header)
-        (f, t) => SetMatch.evalDecoded(dec.decode(data, f, t), sorted)
-    }
-    var i = 0
-    while (i < rowCount) {
-      nextId(rowEval(offs(i), offs(i + 1)))
-      i += 1
-    }
-    new GenericArrayData(out.toArray)
-  }
-
+        !SetMatch.chunkMayContainAny(bloom, sorted)) RowPredicate.Never
+    else SetMatch.prepare(codec, header, sorted)
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
     copy(children = cs)
 }
 
-/** Chunk-granularity matcher: evaluates the pattern over ALL rows of a chunk
-  * in one call and returns the matching doc_ids. DFA build is amortized over
-  * the whole chunk and the row loop never materializes decoded rows (FSST) —
-  * the direct analog of Engine::Scan filling a row-id vector
-  * (/root/reference/src/BenchmarkDriver.hpp:58-59). Bloom-gate first: if any
-  * needed token is absent from the chunk's token bloom, the whole chunk is
-  * skipped (chunk-level analog of required-symbol skipping, SURVEY.md §4 O4).
+/** Chunk-granularity pattern scan. Bloom gate first: if any pattern token is
+  * absent from the chunk's token bloom, the whole chunk is skipped
+  * (chunk-level analog of required-symbol skipping, SURVEY.md §4 O4); FSST
+  * chunks then get the escaped-bloom spelling gate inside
+  * [[graft.core.PatternMatch.prepare]].
   */
 case class ChunkMatchDocIds(children: Seq[Expression], mode: String, parts: Seq[Seq[Int]])
-    extends Expression {
-  // children: doc_ids, data, offsets, row_count, symtab, codec, bloom, escaped_bloom
+    extends ChunkDocIds {
   private val partsArr: Array[Array[Int]] =
     PatternMode.normalize(mode, parts.map(_.toArray).toArray)
-  private val neededTokens: Array[Int] = partsArr.flatten.distinct
-  private val patternId = System.identityHashCode(this)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = s"chunk_match_$mode"
-
-  // One eval per CHUNK row, but keeping it codegen'd keeps the enclosing
-  // scan + Generate inside a single WholeStageCodegen stage.
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("chunkMatch", this, classOf[ChunkMatchDocIds].getName)
-    val evals = children.map(_.genCode(ctx))
-    val anyNull = evals.map(_.isNull).mkString(" || ")
-    val args = Seq(
-      s"(byte[]) ${evals(0).value}", s"(byte[]) ${evals(1).value}",
-      s"(byte[]) ${evals(2).value}", s"(int) ${evals(3).value}",
-      s"(byte[]) ${evals(4).value}", s"(org.apache.spark.unsafe.types.UTF8String) ${evals(5).value}",
-      s"(byte[]) ${evals(6).value}", s"(byte[]) ${evals(7).value}").mkString(", ")
-    val code =
-      code"""
-        ${evals.map(_.code).mkString("\n")}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if ($anyNull) {
-          ${ev.value} = $ref.emptyResult();
-        } else {
-          ${ev.value} = $ref.matchChunk($args);
-        }
-      """
-    ev.copy(code = code, isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  def emptyResult(): org.apache.spark.sql.catalyst.util.ArrayData =
-    new GenericArrayData(Array.empty[Any])
-
-  override def eval(input: InternalRow): Any = {
-    val vals = children.map(_.eval(input))
-    if (vals.contains(null)) emptyResult()
-    else matchChunk(vals(0).asInstanceOf[Array[Byte]], vals(1).asInstanceOf[Array[Byte]],
-      vals(2).asInstanceOf[Array[Byte]], vals(3).asInstanceOf[Int],
-      vals(4).asInstanceOf[Array[Byte]], vals(5).asInstanceOf[UTF8String],
-      vals(6).asInstanceOf[Array[Byte]], vals(7).asInstanceOf[Array[Byte]])
-  }
-
-  def matchChunk(packedIds: Array[Byte], data: Array[Byte], offBytes: Array[Byte],
-                 rowCount: Int, header: Array[Byte], codecU: UTF8String,
-                 bloom: Array[Byte], escaped: Array[Byte]): org.apache.spark.sql.catalyst.util.ArrayData = {
-    // chunk skip: every pattern token must be (possibly) present
-    var t = 0
-    while (t < neededTokens.length) {
-      if (!ChunkStats.bloomHas(bloom, neededTokens(t))) return new GenericArrayData(Array.empty[Any])
-      t += 1
-    }
-    val codec = codecU.toString
-    val offs = Offsets.unpack(offBytes, rowCount)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val idCursor = new graft.core.ByteReader(packedIds, 0, packedIds.length)
-    @inline def nextId(matched: Boolean): Unit = {
-      val len = idCursor.readVarUInt()
-      if (matched) out += UTF8String.fromBytes(packedIds, idCursor.pos, len)
-      idCursor.pos += len
-    }
-    if (codec == FsstTokenCodec.name) {
-      val st = EvalCaches.symtab(header)
-      val pm = PatternMachine.forTable(st, patternId, partsArr)
-      // Chunk-level skipping gate (F6): spelling-path set cover against this
-      // chunk's escaped-token bloom — Left means the pattern is provably
-      // unspellable here and the whole chunk is skipped without touching
-      // `data`. The former per-row required-byte PRE-SCAN is gone: the
-      // zero-state skip run inside the matchers (CodeDfa.hot0) performs the
-      // same byte-skipping in a single pass fused with the match itself, so
-      // a second pass over the row bytes only added work.
-      if (pm.requiredCodeTable(escaped).isLeft) {
-        return new GenericArrayData(Array.empty[Any]) // provably no match
-      }
-      var i = 0
-      while (i < rowCount) {
-        nextId(FsstMatch.eval(mode, pm, data, offs(i), offs(i + 1)))
-        i += 1
-      }
-    } else if (mode == PatternMode.Equals) {
-      // canonical-encoding equality (E5): encode the pattern once with this
-      // chunk's codec, then one byte compare per row
-      PackedEquals.patternImage(codec, header, partsArr(0)) match {
-        case None => return new GenericArrayData(Array.empty[Any])
-        case Some(img) =>
-          var i = 0
-          while (i < rowCount) {
-            nextId(PackedEquals.rowEquals(data, offs(i), offs(i + 1), img))
-            i += 1
-          }
-      }
-    } else if (codec == DictCodec.name) {
-      // dict-domain matching: translate the pattern to dictionary indices
-      // once (an absent token proves the chunk matchless — an exact gate,
-      // stronger than the bloom); rows then match IN PLACE on the bit-packed
-      // index stream via the phase-image matcher (dict = bitpack at width
-      // bitsFor(card−1), base 0) — neither indices nor token values ever
-      // materialize per row.
-      DictMatch.translate(EvalCaches.dict(header), partsArr) match {
-        case None => return new GenericArrayData(Array.empty[Any])
-        case Some(idxParts) =>
-          val prep = PackedAnchor.prepareDict(header, mode, idxParts)
-          var i = 0
-          while (i < rowCount) {
-            nextId(prep.evalRow(data, offs(i), offs(i + 1)))
-            i += 1
-          }
-      }
-    } else if (codec == RleCodec.name) {
-      // RLE-domain matching: run-granularity comparisons, rows never expand
-      val rs = partsArr.map(RleMatch.patternRuns)
-      val pvs = rs.map(_._1)
-      val pcs = rs.map(_._2)
-      val lens = partsArr.map(_.length)
-      var i = 0
-      while (i < rowCount) {
-        nextId(RleMatch.eval(mode, data, offs(i), offs(i + 1), pvs, pcs, lens))
-        i += 1
-      }
-    } else if (PackedAnchor.supports(codec, mode)) {
-      // FoR/bitpack packed-domain matching: anchored modes unpack-compare
-      // O(m) values against the row's own frame; contains/multi-infix slide
-      // the pattern's bit-phase images over the packed stream — either way
-      // no row ever decodes (PackedAnchor scaladoc). Prepared once per chunk.
-      val prep = PackedAnchor.prepare(codec, header, mode, partsArr)
-      var i = 0
-      while (i < rowCount) {
-        nextId(prep.evalRow(data, offs(i), offs(i + 1)))
-        i += 1
-      }
-    } else {
-      val dec = EvalCaches.decoder(codec, header)
-      var i = 0
-      while (i < rowCount) {
-        nextId(TokenMatch.eval(mode, partsArr, dec.decode(data, offs(i), offs(i + 1))))
-        i += 1
-      }
-    }
-    new GenericArrayData(out.toArray)
-  }
+  override def predicate(codec: String, header: Array[Byte], minTok: Int, maxTok: Int,
+                         bloom: Array[Byte], escaped: Array[Byte]): RowPredicate =
+    if (!PatternMatch.chunkMayMatch(bloom, partsArr)) RowPredicate.Never
+    else PatternMatch.prepare(codec, header, mode, partsArr, escaped)
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
     copy(children = cs)
 }

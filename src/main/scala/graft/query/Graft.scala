@@ -478,7 +478,8 @@ object Graft {
                                        parts: Seq[Seq[Int]]): DataFrame =
     zoneGateAll(chunkDf, parts.flatten)
       .select(col("codec"), col("symtab"), col("data"),
-        col("offsets"), col("row_count"), col("doc_ids"), col("source"))
+        col("offsets"), col("row_count"), col("doc_ids"), col("source"),
+        col("stats.symbol_bitmap"), col("stats.escaped_bitmap"))
 
   private def zoneGateAll(chunks: DataFrame, required: Seq[Int]): DataFrame =
     if (required.isEmpty) chunks
@@ -490,25 +491,20 @@ object Graft {
     * chunk ≈ one Engine::Scan per block in the reference.
     */
   def scanPattern(chunks: DataFrame, mode: String, parts: Seq[Seq[Int]]): DataFrame = {
-    val matchExpr = ChunkMatchDocIds(
-      Seq(col2expr(col("doc_ids")), col2expr(col("data")), col2expr(col("offsets")),
-        col2expr(col("row_count")), col2expr(col("symtab")), col2expr(col("codec")),
-        col2expr(col("stats.symbol_bitmap")), col2expr(col("stats.escaped_bitmap"))),
-      mode, parts)
+    val matchExpr = ChunkMatchDocIds(chunkScanChildren, mode, parts)
     zoneGateAll(chunks, parts.flatten)
       .select(explode(mkCol(matchExpr)).as("doc_id"))
   }
+
+  private def chunkScanChildren: Seq[Expression] =
+    ChunkDocIds.columns.map(c => col2expr(col(c)))
 
   /** Chunk-granularity range scan (any token in [lo,hi]) with zone-map
     * pruning on the chunk's min/max token stats — the range analog of
     * [[scanPattern]].
     */
   def scanRange(chunks: DataFrame, lo: Int, hi: Int): DataFrame = {
-    val rangeExpr = ChunkRangeDocIds(
-      Seq(col2expr(col("doc_ids")), col2expr(col("data")), col2expr(col("offsets")),
-        col2expr(col("row_count")), col2expr(col("symtab")), col2expr(col("codec")),
-        col2expr(col("stats.min_tok")), col2expr(col("stats.max_tok"))),
-      lo, hi)
+    val rangeExpr = ChunkRangeDocIds(chunkScanChildren, lo, hi)
     // interval-overlap conjunct, pushed to the storage scan (see zoneGateAll)
     chunks.filter(col("stats.max_tok") >= lit(lo) && col("stats.min_tok") <= lit(hi))
       .select(explode(mkCol(rangeExpr)).as("doc_id"))
@@ -518,12 +514,7 @@ object Graft {
     * AND bloom gating — the blocklist filter as a chunk scan.
     */
   def scanSet(chunks: DataFrame, set: Seq[Int]): DataFrame = {
-    val setExpr = ChunkSetDocIds(
-      Seq(col2expr(col("doc_ids")), col2expr(col("data")), col2expr(col("offsets")),
-        col2expr(col("row_count")), col2expr(col("symtab")), col2expr(col("codec")),
-        col2expr(col("stats.min_tok")), col2expr(col("stats.max_tok")),
-        col2expr(col("stats.symbol_bitmap"))),
-      set)
+    val setExpr = ChunkSetDocIds(chunkScanChildren, set)
     // ANY-semantics: a chunk can match only if its token interval overlaps
     // the set's hull [set.min, set.max] — conservative, pushed to storage
     val gated =
@@ -643,78 +634,73 @@ object Graft {
   }
 
   /** Late materialization on the InternalRow plane (mirrors
-    * EncodeJob.decodeDf — round 4): the match runs on compressed bytes in
-    * each codec's own domain (FSST DFA / packed bit-phase / decode-then-
-    * match fallback), matched rows decode straight to InternalRows, matched
-    * doc ids become zero-copy UTF8String views over the packed id slab. No
-    * EncodedChunk or TokenRow object ever materializes.
+    * EncodeJob.decodeDf — round 4): each chunk runs the same gate and row
+    * predicate as [[scanPattern]] (token bloom, then
+    * [[graft.core.PatternMatch.prepare]] in the codec's own domain), matched
+    * rows decode straight to InternalRows, matched doc ids become zero-copy
+    * UTF8String views over the packed id slab. No EncodedChunk or TokenRow
+    * object ever materializes.
     */
   def scanAndDecodeDf(chunkDf: DataFrame, mode: String, parts: Seq[Seq[Int]]): DataFrame = {
+    import graft.core.{PatternMatch, RowPredicate}
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
     import org.apache.spark.unsafe.types.UTF8String
     val spark = chunkDf.sparkSession
-    val partsArr = parts.map(_.toArray).toArray
+    val normalized = graft.core.PatternMode.normalize(mode, parts.map(_.toArray).toArray)
     val proj = lateMatProjection(chunkDf, parts)
     val rdd = GraftBridge.toInternalRdd(proj).mapPartitions { it =>
-      val normalized = graft.core.PatternMode.normalize(mode, partsArr)
       it.flatMap { r =>
         // copy every field out of the (reused) scan row before the lazy
         // per-row iterator (getBinary copies; UTF8Strings cloned)
         val codec = r.getUTF8String(0).toString
         val symtab = r.getBinary(1)
-        val data = r.getBinary(2)
-        val offs = graft.format.Offsets.unpack(r.getBinary(3), r.getInt(4))
-        val rowCount = r.getInt(4)
-        val docIds = r.getBinary(5)
-        val source = r.getUTF8String(6).clone()
-        val dec = graft.core.Codecs.byName(codec).decoder(symtab)
-        val matches: Int => Boolean =
-          if (codec == graft.core.FsstTokenCodec.name) {
-            val st = graft.core.SymTab.fromBytes(symtab)
-            val pm = new graft.core.PatternMachine(normalized, st)
-            i => graft.core.FsstMatch.eval(mode, pm, data, offs(i), offs(i + 1))
-          } else if (graft.core.PackedAnchor.supports(codec, mode)) {
-            val prep = graft.core.PackedAnchor.prepare(codec, symtab, mode, normalized)
-            i => prep.evalRow(data, offs(i), offs(i + 1))
-          } else {
-            i => graft.core.TokenMatch.eval(mode, normalized,
-              dec.decode(data, offs(i), offs(i + 1)))
-          }
-        new Iterator[InternalRow] {
-          private var i = 0
-          private var idPos = 0
-          private var idAt = 0 // row index the id cursor sits on
-          private def idOf(row: Int): UTF8String = {
-            // sequential cursor over the packed slab; rows only move forward
-            while (idAt < row) {
+        val matches =
+          if (!PatternMatch.chunkMayMatch(r.getBinary(7), normalized)) RowPredicate.Never
+          else PatternMatch.prepare(codec, symtab, mode, normalized, r.getBinary(8))
+        if (matches eq RowPredicate.Never) Iterator.empty
+        else {
+          val data = r.getBinary(2)
+          val offs = graft.format.Offsets.unpack(r.getBinary(3), r.getInt(4))
+          val rowCount = r.getInt(4)
+          val docIds = r.getBinary(5)
+          val source = r.getUTF8String(6).clone()
+          val dec = graft.core.Codecs.byName(codec).decoder(symtab)
+          new Iterator[InternalRow] {
+            private var i = 0
+            private var idPos = 0
+            private var idAt = 0 // row index the id cursor sits on
+            private def idOf(row: Int): UTF8String = {
+              // sequential cursor over the packed slab; rows only move forward
+              while (idAt < row) {
+                var len = 0; var shift = 0; var b = 0
+                do {
+                  b = docIds(idPos) & 0xff; idPos += 1
+                  len |= (b & 0x7f) << shift; shift += 7
+                } while ((b & 0x80) != 0)
+                idPos += len
+                idAt += 1
+              }
               var len = 0; var shift = 0; var b = 0
+              var p = idPos
               do {
-                b = docIds(idPos) & 0xff; idPos += 1
+                b = docIds(p) & 0xff; p += 1
                 len |= (b & 0x7f) << shift; shift += 7
               } while ((b & 0x80) != 0)
-              idPos += len
-              idAt += 1
+              UTF8String.fromBytes(docIds, p, len)
             }
-            var len = 0; var shift = 0; var b = 0
-            var p = idPos
-            do {
-              b = docIds(p) & 0xff; p += 1
-              len |= (b & 0x7f) << shift; shift += 7
-            } while ((b & 0x80) != 0)
-            UTF8String.fromBytes(docIds, p, len)
-          }
-          private def advance(): Unit =
-            while (i < rowCount && !matches(i)) i += 1
-          advance()
-          def hasNext: Boolean = i < rowCount
-          def next(): InternalRow = {
-            val id = idOf(i)
-            val toks = dec.decode(data, offs(i), offs(i + 1))
-            i += 1
+            private def advance(): Unit =
+              while (i < rowCount && !matches(data, offs(i), offs(i + 1))) i += 1
             advance()
-            new GenericInternalRow(Array[Any](
-              id, UnsafeArrayData.fromPrimitiveArray(toks), toks.length, source))
+            def hasNext: Boolean = i < rowCount
+            def next(): InternalRow = {
+              val id = idOf(i)
+              val toks = dec.decode(data, offs(i), offs(i + 1))
+              i += 1
+              advance()
+              new GenericInternalRow(Array[Any](
+                id, UnsafeArrayData.fromPrimitiveArray(toks), toks.length, source))
+            }
           }
         }
       }

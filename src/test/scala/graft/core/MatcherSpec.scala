@@ -293,8 +293,7 @@ class MatcherSpec extends AnyFunSuite {
               else DictMatch.translate(dict, Array(part)) match {
                 case None => false
                 case Some(idxParts) =>
-                  PackedAnchor.prepareDict(header, mode, idxParts)
-                    .evalRow(data, off(i), off(i + 1))
+                  PackedAnchor.prepareDict(header, mode, idxParts)(data, off(i), off(i + 1))
               }
             gotIdx == want && gotPacked == want
           } && {
@@ -306,8 +305,8 @@ class MatcherSpec extends AnyFunSuite {
             val gotMi = DictMatch.translate(dict, mi) match {
               case None => false
               case Some(idxParts) =>
-                PackedAnchor.prepareDict(header, PatternMode.MultiInfix, idxParts)
-                  .evalRow(data, off(i), off(i + 1))
+                PackedAnchor.prepareDict(header, PatternMode.MultiInfix, idxParts)(
+                  data, off(i), off(i + 1))
             }
             gotMi == wantMi
           }
@@ -357,8 +356,8 @@ class MatcherSpec extends AnyFunSuite {
       }
       // the remaining kernels must agree that nothing matches / counts zero
       rows.indices.foreach { i =>
-        assert(!SetMatch.evalRow(c.codec, c.symtab, c.data, offs(i), offs(i + 1), Array(1, 2)), c.codec)
-        assert(!RangeMatch.evalRow(c.codec, c.symtab, c.data, offs(i), offs(i + 1), 0, 100), c.codec)
+        assert(!SetMatch.prepare(c.codec, c.symtab, Array(1, 2))(c.data, offs(i), offs(i + 1)), c.codec)
+        assert(!RangeMatch.prepare(c.codec, c.symtab, 0, 100)(c.data, offs(i), offs(i + 1)), c.codec)
       }
       val (cnt, ntok) = SetCountMatch.chunkRowSetCounts(
         c.codec, c.symtab, c.data, offs, c.row_count, Array(1, 2))

@@ -415,24 +415,47 @@ class QuerySpec extends AnyFunSuite {
   }
 
   test("late materialization decodes exactly the matching rows (InternalRow path)") {
-    import spark.implicits._
     val v = vocab
-    for ((codecName, chunkDf) <- Seq(
-        "fsst" -> chunks,
-        "bitpack" -> EncodeJob.encode(input,
-          EncodeOptions(numBuckets = 4, maxRowsPerChunk = 64,
-            forceCodec = Some("bitpack"))).toDF(),
-        "auto" -> EncodeJob.encode(input,
-          EncodeOptions(numBuckets = 4, maxRowsPerChunk = 64)).toDF());
-        (mode, parts) <- Seq(
-          PatternMode.Contains -> Seq(Seq(v("value"), v("table"))),
-          PatternMode.Prefix -> Seq(Seq(v("key"))))) {
+    val patterns = Seq(
+      PatternMode.Contains -> Seq(Seq(v("value"), v("table"))),
+      PatternMode.Prefix -> Seq(Seq(v("key"))),
+      PatternMode.Suffix -> Seq(Seq(v("value"))),
+      PatternMode.Equals -> Seq(Seq(v("value"))),
+      PatternMode.MultiInfix -> Seq(Seq(v("table")), Seq(v("scan"))))
+    def lateDecodeAgrees(name: String, chunkDf: DataFrame, mode: String,
+                         parts: Seq[Seq[Int]]): Unit = {
       val got = Graft.scanAndDecodeDf(chunkDf, mode, parts)
         .select(col("doc_id"), col("tokens"), col("n_tok"), col("source"))
       val want = input.toDF().filter(mkPred(mode, parts, col("tokens")))
       assert(want.except(got).isEmpty && got.except(want).isEmpty,
-        s"$codecName/$mode late-decode differs from raw oracle")
+        s"$name/$mode $parts: late-decode differs from raw oracle")
     }
+    val tables = Seq("fsst" -> chunks) ++
+      Seq("dict", "rle", "for", "bitpack", "raw").map(c => c -> EncodeJob.encode(input,
+        EncodeOptions(numBuckets = 4, maxRowsPerChunk = 64, forceCodec = Some(c))).cache().toDF()) :+
+      ("auto" -> EncodeJob.encode(input,
+        EncodeOptions(numBuckets = 4, maxRowsPerChunk = 64)).toDF())
+    for ((name, chunkDf) <- tables; (mode, parts) <- patterns)
+      lateDecodeAgrees(name, chunkDf, mode, parts)
+    // a vocabulary token absent from one dict chunk's dictionary, with that
+    // chunk's bloom saturated (as at dictionary sizes near the 4096 cap) so
+    // it passes the zone map and the bloom: only the exact dictionary gate
+    // can skip the chunk, while other chunks still hold matching rows
+    import spark.implicits._
+    val dictChunks = tables.find(_._1 == "dict").get._2.as[graft.format.EncodedChunk].collect()
+    val (gated, tok) = (for {
+      c <- dictChunks.iterator
+      dict = graft.core.DictCodec.readDict(c.symtab)
+      t <- v.values.iterator if java.util.Arrays.binarySearch(dict, t) < 0 &&
+        t > c.stats.min_tok && t < c.stats.max_tok
+    } yield (c, t)).next()
+    val saturated = gated.copy(stats = gated.stats.copy(
+      symbol_bitmap = Array.fill(gated.stats.symbol_bitmap.length)(-1.toByte)))
+    assert(graft.core.PatternMatch.prepare(saturated.codec, saturated.symtab, PatternMode.Contains,
+      Array(Array(tok)), saturated.stats.escaped_bitmap) eq graft.core.RowPredicate.Never)
+    val patched = dictChunks.map(c => if (c eq gated) saturated else c).toSeq.toDS().toDF()
+    lateDecodeAgrees("dict, saturated bloom", patched, PatternMode.Contains, Seq(Seq(tok)))
+    assert(Graft.scanAndDecodeDf(patched, PatternMode.Contains, Seq(Seq(tok))).count() > 0)
   }
 
   test("compressed-domain token histogram equals the decoded histogram per codec") {

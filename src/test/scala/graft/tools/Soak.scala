@@ -138,7 +138,7 @@ object Soak {
               else DictMatch.translate(dict, Array(part)) match {
                 case None => false
                 case Some(ip) =>
-                  PackedAnchor.prepareDict(header, m, ip).evalRow(data, offs(i), offs(i + 1))
+                  PackedAnchor.prepareDict(header, m, ip)(data, offs(i), offs(i + 1))
               }
             gotIdx == want && gotPacked == want
           }
@@ -243,9 +243,9 @@ object Soak {
             val offs = new Array[Int](rows.length + 1)
             rows.zipWithIndex.foreach { case (r, i) => enc.encode(r, out); offs(i + 1) = out.size }
             val data = out.toBytes
+            val rowMatch = RangeMatch.prepare(codec.name, header, lo, hi)
             rows.indices.forall { i =>
-              RangeMatch.evalRow(codec.name, header, data, offs(i), offs(i + 1), lo, hi) ==
-                RangeMatch.evalDecoded(rows(i), lo, hi)
+              rowMatch(data, offs(i), offs(i + 1)) == RangeMatch.evalDecoded(rows(i), lo, hi)
             }
           }
         }, 2000)
@@ -273,9 +273,9 @@ object Soak {
             val offs = new Array[Int](rows.length + 1)
             rows.zipWithIndex.foreach { case (r, i) => enc.encode(r, out); offs(i + 1) = out.size }
             val data = out.toBytes
+            val rowMatch = SetMatch.prepare(codec.name, header, sorted)
             rows.indices.forall { i =>
-              SetMatch.evalRow(codec.name, header, data, offs(i), offs(i + 1), sorted) ==
-                SetMatch.evalDecoded(rows(i), sorted)
+              rowMatch(data, offs(i), offs(i + 1)) == SetMatch.evalDecoded(rows(i), sorted)
             }
           }
         }, 2000)
@@ -337,10 +337,9 @@ object Soak {
                 java.util.Arrays.equals(decoded(i).tokens, want(i)))
             val scHeader = sc.symtab
             val scOffs = graft.format.Offsets.unpack(sc.offsets, sc.row_count)
+            val scMatch = SetMatch.prepare(sc.codec, scHeader, sorted)
             val noBanned = sorted.isEmpty || SetMatch.contains(sorted, unk) ||
-              rows.indices.forall { i =>
-                !SetMatch.evalRow(sc.codec, scHeader, sc.data, scOffs(i), scOffs(i + 1), sorted)
-              }
+              rows.indices.forall(i => !scMatch(sc.data, scOffs(i), scOffs(i + 1)))
             roundTrip && noBanned
           }
         }, 2000)
