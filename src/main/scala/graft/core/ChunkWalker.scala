@@ -44,17 +44,7 @@ object ChunkWalker {
     case ForCodec.name =>
       walkPacked(data, offs, rowCount, header(0) & 0xff, hasBase = true, null, sink)
     case RawCodec.name       => walkRaw(data, offs, rowCount, sink)
-    case other =>
-      val dec = Codecs.byName(other).decoder(header)
-      var i = 0
-      while (i < rowCount) {
-        val row = dec.decode(data, offs(i), offs(i + 1))
-        sink.rowStart(i, row.length)
-        var k = 0
-        while (k < row.length) { sink.feed(row(k)); k += 1 }
-        sink.rowEnd(i)
-        i += 1
-      }
+    case other => Codecs.unknown(other)
   }
 
   private def walkFsst(st: SymTab, data: Array[Byte], offs: Array[Int],

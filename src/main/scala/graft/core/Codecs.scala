@@ -412,5 +412,14 @@ object BitPack {
 
 object Codecs {
   val all: Seq[ChunkCodec] = Seq(FsstTokenCodec, DictCodec, RleCodec, ForCodec, BitPackCodec, RawCodec)
-  val byName: Map[String, ChunkCodec] = all.map(c => c.name -> c).toMap
+  private val named: Map[String, ChunkCodec] = all.map(c => c.name -> c).toMap
+
+  /** The codec a chunk's `codec` column (or a forced codec) names. */
+  def byName(name: String): ChunkCodec = named.getOrElse(name, unknown(name))
+
+  /** A codec name no dispatch knows: input from outside the program (a
+    * chunk table on disk, a forced codec), so it fails typed.
+    */
+  def unknown(name: String): Nothing = throw new IllegalArgumentException(
+    s"unknown codec '$name' (known: ${all.map(_.name).mkString(", ")})")
 }

@@ -325,15 +325,7 @@ object CountMatch {
         bigramPacked(data, offs, rowCount, header(0) & 0xff, i => i, acc)
       case ForCodec.name       => bigramFor(data, offs, rowCount, header(0) & 0xff, acc)
       case RawCodec.name       => bigramRaw(data, offs, rowCount, acc)
-      case other =>
-        val dec = Codecs.byName(other).decoder(header)
-        var i = 0
-        while (i < rowCount) {
-          val row = dec.decode(data, offs(i), offs(i + 1))
-          var j = 1
-          while (j < row.length) { acc.add(row(j - 1), row(j), 1L); j += 1 }
-          i += 1
-        }
+      case other => Codecs.unknown(other)
     }
   }
 
@@ -548,15 +540,7 @@ object CountMatch {
       case BitPackCodec.name   => countBitpack(data, offs, rowCount, header(0) & 0xff, counter)
       case ForCodec.name       => countFor(data, offs, rowCount, header(0) & 0xff, counter)
       case RawCodec.name       => countRaw(data, offs, rowCount, counter)
-      case other =>
-        val dec = Codecs.byName(other).decoder(header)
-        var i = 0
-        while (i < rowCount) {
-          val row = dec.decode(data, offs(i), offs(i + 1))
-          var j = 0
-          while (j < row.length) { counter.add(row(j), 1L); j += 1 }
-          i += 1
-        }
+      case other => Codecs.unknown(other)
     }
   }
 

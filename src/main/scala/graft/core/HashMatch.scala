@@ -109,15 +109,7 @@ object HashMatch {
         hashPacked(data, offs, rowCount, header(0) & 0xff, null, null, 0L, 0L, h1, h2)
       case ForCodec.name       => hashFor(data, offs, rowCount, header(0) & 0xff, h1, h2)
       case RawCodec.name       => hashRaw(data, offs, rowCount, h1, h2)
-      case other =>
-        val dec = Codecs.byName(other).decoder(header)
-        var i = 0
-        while (i < rowCount) {
-          val row = dec.decode(data, offs(i), offs(i + 1))
-          h1(i) = hashTokens1(row, 0, row.length)
-          h2(i) = hashTokens2(row, 0, row.length)
-          i += 1
-        }
+      case other => Codecs.unknown(other)
     }
     (h1, h2)
   }

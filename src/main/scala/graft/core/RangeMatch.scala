@@ -198,8 +198,6 @@ object RangeMatch {
         val width = header(0) & 0xff
         (d, f, t) => evalFor(d, f, t, width, lo, hi)
       case RawCodec.name => (d, f, t) => evalRaw(d, f, t, lo, hi)
-      case other =>
-        val dec = Codecs.byName(other).decoder(header)
-        (d, f, t) => evalDecoded(dec.decode(d, f, t), lo, hi)
+      case other => Codecs.unknown(other)
     }
 }

@@ -50,6 +50,10 @@ object SetMatch {
     false
   }
 
+  /** Both chunk gates: false only when no set element can be in the chunk. */
+  def chunkMayHit(sorted: Array[Int], minTok: Int, maxTok: Int, bloom: Array[Byte]): Boolean =
+    chunkOverlaps(sorted, minTok, maxTok) && chunkMayContainAny(bloom, sorted)
+
   // --- fsst ----------------------------------------------------------------
 
   def fsstCodeTable(st: SymTab, sorted: Array[Int]): Array[Boolean] = {
@@ -221,8 +225,6 @@ object SetMatch {
         val width = header(0) & 0xff
         (d, f, t) => evalFor(d, f, t, width, sorted)
       case RawCodec.name => (d, f, t) => evalRaw(d, f, t, sorted)
-      case other =>
-        val dec = Codecs.byName(other).decoder(header)
-        (d, f, t) => evalDecoded(dec.decode(d, f, t), sorted)
+      case other => Codecs.unknown(other)
     }
 }

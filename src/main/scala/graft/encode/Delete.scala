@@ -101,18 +101,14 @@ object Delete {
     // id-slab splice (no per-row String materialization except the first)
     val idsOut = new ByteWriter(c.doc_ids.length)
     var firstId: String = null
-    val ir = new ByteReader(c.doc_ids, 0, c.doc_ids.length)
+    val ids = PackedIds.cursor(c.doc_ids)
     var i = 0
     while (i < c.row_count) {
-      val entryStart = ir.pos
-      val len = ir.readVarUInt()
-      val strStart = ir.pos
-      ir.pos += len
-      if (!del(i)) {
-        idsOut.writeBytes(c.doc_ids, entryStart, ir.pos - entryStart)
-        if (firstId == null)
-          firstId = new String(c.doc_ids, strStart, len,
-            java.nio.charset.StandardCharsets.UTF_8)
+      val entryStart = ids.pos
+      if (del(i)) ids.skip()
+      else {
+        if (firstId == null) firstId = ids.nextString() else ids.skip()
+        idsOut.writeBytes(c.doc_ids, entryStart, ids.pos - entryStart)
       }
       i += 1
     }

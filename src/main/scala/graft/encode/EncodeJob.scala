@@ -223,22 +223,13 @@ object EncodeJob {
           s"chunk $chunkId: crc mismatch")
         val dec = graft.core.Codecs.byName(codecName).decoder(symtab)
         val offs = graft.format.Offsets.unpack(offBytes, rowCount)
+        // ids are VIEWS into docIds (fresh per chunk, shared across its rows)
+        val ids = graft.format.PackedIds.cursor(docIds)
         new Iterator[InternalRow] {
           private var i = 0
-          private var idPos = 0
           def hasNext: Boolean = i < rowCount
           def next(): InternalRow = {
-            // inline varUInt over the packed id slab; the UTF8String is a
-            // VIEW into docIds (fresh per chunk, shared across its rows)
-            var len = 0
-            var shift = 0
-            var b = 0
-            do {
-              b = docIds(idPos) & 0xff; idPos += 1
-              len |= (b & 0x7f) << shift; shift += 7
-            } while ((b & 0x80) != 0)
-            val id = org.apache.spark.unsafe.types.UTF8String.fromBytes(docIds, idPos, len)
-            idPos += len
+            val id = ids.next()
             val toks = dec.decode(data, offs(i), offs(i + 1))
             i += 1
             new GenericInternalRow(Array[Any](
@@ -483,26 +474,23 @@ private final class GroupBuffer {
   def size: Int = nRows
   def tokenCount: Long = len.toLong
 
-  def docId(i: Int): String = {
-    val raw = idSlab.ensureRaw(0)
-    val r = new graft.core.ByteReader(raw, idOffs(i), idSlab.size)
-    val l = r.readVarUInt()
-    new String(raw, r.pos, l, java.nio.charset.StandardCharsets.UTF_8)
-  }
+  private def idAt(i: Int): PackedIds.Cursor =
+    new PackedIds.Cursor(idSlab.ensureRaw(0), idOffs(i))
+
+  def docId(i: Int): String = idAt(i).nextString()
 
   /** PackedIds payload for rows in `order`. Identity order = one slab copy;
     * a permutation repacks per row (bytes only, still no Strings).
     */
   def packedIds(order: Array[Int], identity: Boolean): Array[Byte] = {
     if (identity) return idSlab.toBytes
-    val raw = idSlab.ensureRaw(0)
     val w = new graft.core.ByteWriter(idSlab.size + 8)
     var i = 0
     while (i < order.length) {
-      val off = idOffs(order(i))
-      val r = new graft.core.ByteReader(raw, off, idSlab.size)
-      val l = r.readVarUInt()
-      w.writeBytes(raw, off, (r.pos - off) + l)
+      val ids = idAt(order(i))
+      val off = ids.pos
+      ids.skip()
+      w.writeBytes(idSlab.ensureRaw(0), off, ids.pos - off)
       i += 1
     }
     w.toBytes
@@ -511,21 +499,7 @@ private final class GroupBuffer {
   /** Unsigned byte-lexicographic doc_id compare (sorted-mode tie-break;
     * equals UTF-16 String order for ASCII ids, code-point order otherwise).
     */
-  def idCompare(a: Int, b: Int): Int = {
-    val raw = idSlab.ensureRaw(0)
-    val ra = new graft.core.ByteReader(raw, idOffs(a), idSlab.size)
-    val rb = new graft.core.ByteReader(raw, idOffs(b), idSlab.size)
-    val la = ra.readVarUInt()
-    val lb = rb.readVarUInt()
-    var i = 0
-    val lim = math.min(la, lb)
-    while (i < lim) {
-      val c = (raw(ra.pos + i) & 0xff) - (raw(rb.pos + i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    la - lb
-  }
+  def idCompare(a: Int, b: Int): Int = idAt(a).next().binaryCompare(idAt(b).next())
 
   /** Slab view of the rows permuted to `order` — the codecs encode straight
     * out of `big`; only the two offset tables are copied.

@@ -85,8 +85,8 @@ object Scrub {
     require(keys.length == vals.length, "keys/vals must be parallel arrays")
     if (keys.isEmpty) return c
     // chunk gates: zone map, bloom, and (dict) exact dictionary intersection
-    if (!SetMatch.chunkOverlaps(keys, c.stats.min_tok, c.stats.max_tok)) return c
-    if (!SetMatch.chunkMayContainAny(c.stats.symbol_bitmap, keys)) return c
+    if (!SetMatch.chunkMayHit(keys, c.stats.min_tok, c.stats.max_tok, c.stats.symbol_bitmap))
+      return c
     c.codec match {
       case "rle" => scrubRle(c, keys, vals)
       case "dict" =>

@@ -84,11 +84,46 @@ object Offsets {
   }
 }
 
-/** Packed per-row doc ids: varUInt(byteLen) + UTF-8 bytes per row. Sequential
-  * cursor access matches the matchers' row loops; only matched ids are ever
-  * materialized as strings.
+/** Packed per-row doc ids: varUInt(byteLen) + UTF-8 bytes per row. The only
+  * reader of this format is [[PackedIds.Cursor]]: sequential access matches
+  * the operators' row loops, and only the ids a consumer asks for are ever
+  * materialized.
   */
 object PackedIds {
+  import org.apache.spark.unsafe.types.UTF8String
+
+  /** Forward cursor over a packed id slab, sitting on the record that starts
+    * at byte `pos`. `next` returns a zero-copy UTF8String view over the slab
+    * (Spark's output projection copies it before the next row is pulled);
+    * `skip` steps over a record without building anything.
+    */
+  final class Cursor(slab: Array[Byte], var pos: Int) {
+    private def length(): Int = {
+      var len = 0; var shift = 0; var b = 0
+      do {
+        b = slab(pos) & 0xff; pos += 1
+        len |= (b & 0x7f) << shift; shift += 7
+      } while ((b & 0x80) != 0)
+      len
+    }
+    def next(): UTF8String = {
+      val len = length()
+      val id = UTF8String.fromBytes(slab, pos, len)
+      pos += len
+      id
+    }
+    /** The next id decoded to a fresh String. */
+    def nextString(): String = {
+      val len = length()
+      val id = new String(slab, pos, len, java.nio.charset.StandardCharsets.UTF_8)
+      pos += len
+      id
+    }
+    def skip(): Unit = { val len = length(); pos += len }
+  }
+
+  def cursor(slab: Array[Byte]): Cursor = new Cursor(slab, 0)
+
   def pack(ids: Array[String]): Array[Byte] = {
     val w = new graft.core.ByteWriter(ids.length * 12)
     var i = 0
@@ -101,15 +136,10 @@ object PackedIds {
     w.toBytes
   }
   def unpackAll(packed: Array[Byte], rowCount: Int): Array[String] = {
-    val r = new graft.core.ByteReader(packed, 0, packed.length)
+    val ids = cursor(packed)
     val out = new Array[String](rowCount)
     var i = 0
-    while (i < rowCount) {
-      val len = r.readVarUInt()
-      out(i) = new String(packed, r.pos, len, java.nio.charset.StandardCharsets.UTF_8)
-      r.pos += len
-      i += 1
-    }
+    while (i < rowCount) { out(i) = ids.nextString(); i += 1 }
     out
   }
 }

@@ -1,7 +1,7 @@
 package graft.query
 
 import graft.core._
-import graft.format.Offsets
+import graft.format.{Offsets, PackedIds}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -47,81 +47,12 @@ case class DecodeRow(enc: Expression, header: Expression, codecName: Expression)
     copy(enc = f, header = s, codecName = t)
 }
 
-/** Partial decode of a row's first k tokens (read-side head projection):
-  * the pushdown rule rewrites `slice(decode_row(…), 1, k)` into this, so
-  * head-of-document features on the encoded view decode O(k) tokens per
-  * row instead of the whole row — the read-side dual of encode.Truncate.
-  */
-case class DecodeHead(enc: Expression, header: Expression, codecName: Expression, k: Int)
-    extends TernaryExpression {
-  override def first: Expression = enc
-  override def second: Expression = header
-  override def third: Expression = codecName
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = enc.nullable || header.nullable || codecName.nullable
-  override def prettyName: String = "decode_head"
-
-  // head decoder per (codec, header): header parsed once per chunk
-  @transient private lazy val decoders = new HeaderCache[HeadRowDecoder](HeadDecode.decoder)
-
-  def decodeOne(e: Array[Byte], h: Array[Byte], c: UTF8String): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(decoders.get(c, h).decodeHead(e, 0, e.length, k))
-
-  override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
-    decodeOne(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]],
-      c.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("decodeHead", this, classOf[DecodeHead].getName)
-    nullSafeCodeGen(ctx, ev, (e, h, c) => s"${ev.value} = $ref.decodeOne($e, $h, $c);")
-  }
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
-    copy(enc = f, header = s, codecName = t)
-}
-
-/** Partial decode of a row's LAST k tokens (read-side tail projection):
-  * the pushdown rule rewrites `slice(decode_row(…), −k, k)` into this —
-  * exact builtin semantics incl. rows shorter than k slicing to empty.
-  * FSST skips to the cut via code lengths without expanding symbols (the
-  * suffix matcher's skip phase); packed codecs random-access the bit
-  * stream at index n−k.
-  */
-case class DecodeTail(enc: Expression, header: Expression, codecName: Expression, k: Int)
-    extends TernaryExpression {
-  override def first: Expression = enc
-  override def second: Expression = header
-  override def third: Expression = codecName
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = enc.nullable || header.nullable || codecName.nullable
-  override def prettyName: String = "decode_tail"
-
-  @transient private lazy val decoders = new HeaderCache[TailRowDecoder](TailDecode.decoder)
-
-  def decodeOne(e: Array[Byte], h: Array[Byte], c: UTF8String): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(decoders.get(c, h).decodeTail(e, 0, e.length, k))
-
-  override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
-    decodeOne(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]],
-      c.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("decodeTail", this, classOf[DecodeTail].getName)
-    nullSafeCodeGen(ctx, ev, (e, h, c) => s"${ev.value} = $ref.decodeOne($e, $h, $c);")
-  }
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
-    copy(enc = f, header = s, codecName = t)
-}
-
-/** Partial decode of an arbitrary mid window (read-side slice projection):
-  * the pushdown rule rewrites `slice(decode_row(…), s, k)` for ANY nonzero
+/** Partial decode of a window of a row (read-side slice projection): the
+  * pushdown rule rewrites `slice(decode_row(…), s, k)` for ANY nonzero
   * literal start into this — exact builtin semantics (negative start from
   * the end, out-of-range start → empty, window clipped at the row end).
-  * Generalizes DecodeHead/DecodeTail: fixed-stride model-input windows on
-  * the encoded view decode O(skip + k) per row, never the whole row.
+  * Heads, tails and fixed-stride model-input windows on the encoded view
+  * decode O(skip + k) per row, never the whole row.
   */
 case class DecodeSlice(enc: Expression, header: Expression, codecName: Expression,
                        s: Int, k: Int) extends TernaryExpression {
@@ -328,12 +259,10 @@ abstract class ChunkDocIds extends Expression {
     if (rowMatch eq RowPredicate.Never) return emptyResult()
     val offs = Offsets.unpack(offBytes, rowCount)
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val idCursor = new ByteReader(packedIds, 0, packedIds.length)
+    val ids = PackedIds.cursor(packedIds)
     var i = 0
     while (i < rowCount) {
-      val len = idCursor.readVarUInt()
-      if (rowMatch(data, offs(i), offs(i + 1))) out += UTF8String.fromBytes(packedIds, idCursor.pos, len)
-      idCursor.pos += len
+      if (rowMatch(data, offs(i), offs(i + 1))) out += ids.next() else ids.skip()
       i += 1
     }
     new GenericArrayData(out.toArray)
@@ -443,8 +372,7 @@ case class ChunkSetDocIds(children: Seq[Expression], tokens: Seq[Int])
   override def prettyName: String = "chunk_set"
   override def predicate(codec: String, header: Array[Byte], minTok: Int, maxTok: Int,
                          bloom: Array[Byte], escaped: Array[Byte]): RowPredicate =
-    if (!SetMatch.chunkOverlaps(sorted, minTok, maxTok) ||
-        !SetMatch.chunkMayContainAny(bloom, sorted)) RowPredicate.Never
+    if (!SetMatch.chunkMayHit(sorted, minTok, maxTok, bloom)) RowPredicate.Never
     else SetMatch.prepare(codec, header, sorted)
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
     copy(children = cs)
@@ -469,101 +397,129 @@ case class ChunkMatchDocIds(children: Seq[Expression], mode: String, parts: Seq[
     copy(children = cs)
 }
 
-/** encoded_rows(doc_ids, data, offsets, row_count) — lazy generator behind
-  * the per-document encoded view: emits one (doc_id, enc) row per encoded
-  * document STRAIGHT off the chunk's two packed slabs. The doc id is a
-  * zero-copy UTF8String view over the id slab (GenerateExec's output
-  * UnsafeProjection copies it before the next row is requested) and `enc`
-  * is the row's byte slice — the only per-row allocation. Replaces the
-  * round-4 `arrays_zip(unpack_ids, row_slices) + explode` formulation,
-  * which materialized ALL row slices plus an id array (~2× chunk memory)
-  * as intermediate GenericArrayData before exploding.
+/** One chunk row as a per-document generator's kernel sees it: the row
+  * planes, and — when the generator reads them — the codec header and the
+  * chunk's zone map and token bloom (null / 0 past the generator's prefix
+  * of [[DocRowsGenerator.columns]]).
   */
-case class EncodedRowsGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(docIds, data, offsets, rowCount)
+final class ChunkRows(val data: Array[Byte], val offs: Array[Int], val rows: Int,
+                      val header: Array[Byte], val codec: String,
+                      val minTok: Int, val maxTok: Int, val bloom: Array[Byte])
+
+/** A kernel's answer for one chunk: how many rows document i emits, and
+  * what row j of document i holds.
+  */
+trait DocRows {
+  def count(i: Int): Int = 1
+  def row(id: UTF8String, i: Int, j: Int): InternalRow
+}
+
+object DocRowsGenerator {
+  /** The children of every per-document generator, in order; each generator
+    * takes the prefix it reads, so metadata-only generators never touch the
+    * header or the stats.
+    */
+  val columns: Seq[String] = Seq("doc_ids", "data", "offsets", "row_count", "symtab", "codec",
+    "stats.min_tok", "stats.max_tok", "stats.symbol_bitmap")
+  /** The id slab and the row planes. */
+  val slabs: Seq[String] = columns.take(4)
+  /** Plus the codec and its header. */
+  val coded: Seq[String] = columns.take(6)
+  /** Plus the zone map and the token bloom. */
+  val gated: Seq[String] = columns
+}
+
+/** Lazy generator emitting rows per encoded document straight off a chunk
+  * row. The base evaluates the children, skips empty chunks, unpacks the
+  * offsets, reads the codec and header, runs the subclass's [[kernel]] once
+  * per chunk and walks the packed id slab with one [[PackedIds.Cursor]]:
+  * doc ids are zero-copy UTF8String views (GenerateExec's output projection
+  * copies each row before the next is requested) and documents that emit no
+  * row skip their id without building it. Subclasses give their schema,
+  * name and kernel; their first constructor parameter is `children`.
+  */
+abstract class DocRowsGenerator extends Expression with Generator with CodegenFallback {
+  protected def kernel(c: ChunkRows): DocRows
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val v = children.map(_.eval(input)).toArray
+    val rows = v(3).asInstanceOf[Int]
+    if (rows == 0) return Iterator.empty
+    def at(i: Int): Any = if (i < v.length) v(i) else null
+    val c = new ChunkRows(v(1).asInstanceOf[Array[Byte]],
+      Offsets.unpack(v(2).asInstanceOf[Array[Byte]], rows), rows,
+      at(4).asInstanceOf[Array[Byte]], if (at(5) == null) null else at(5).toString,
+      at(6).asInstanceOf[Int], at(7).asInstanceOf[Int], at(8).asInstanceOf[Array[Byte]])
+    val out = kernel(c)
+    val ids = PackedIds.cursor(v(0).asInstanceOf[Array[Byte]])
+    new Iterator[InternalRow] {
+      private var i = 0 // document
+      private var j = 0 // row of document i
+      private var n = 0 // rows document i emits
+      private var id: UTF8String = _
+      seek()
+      /** Move from document i to the first document that emits a row. */
+      private def seek(): Unit = {
+        while (i < rows && { n = out.count(i); n == 0 }) { ids.skip(); i += 1 }
+        if (i < rows) id = ids.next()
+      }
+      def hasNext: Boolean = i < rows
+      def next(): InternalRow = {
+        val r = out.row(id, i, j)
+        j += 1
+        if (j == n) { i += 1; j = 0; seek() }
+        r
+      }
+    }
+  }
+
+  // the same case class with new children and the same parameters
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression =
+    makeCopy((cs +: productIterator.drop(1).toSeq).map(_.asInstanceOf[AnyRef]).toArray)
+}
+
+/** encoded_rows — the per-document encoded view: one (doc_id, enc) row per
+  * document, `enc` the row's byte slice (the only per-row allocation besides
+  * the id view). Replaces the round-4 `arrays_zip(unpack_ids, row_slices) +
+  * explode` formulation, which materialized ALL row slices plus an id array
+  * (~2× chunk memory) as intermediate GenericArrayData before exploding.
+  */
+case class EncodedRowsGenerator(children: Seq[Expression]) extends DocRowsGenerator {
   override def elementSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("enc", BinaryType, nullable = false)))
   override def prettyName: String = "encoded_rows"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(p) & 0xff; p += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        val id = UTF8String.fromBytes(ids, p, len)
-        p += len
-        val enc = java.util.Arrays.copyOfRange(bytes, offs(i), offs(i + 1))
-        i += 1
-        new GenericInternalRow(Array[Any](id, enc))
-      }
-    }
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3))
+  override protected def kernel(c: ChunkRows): DocRows = (id, i, _) =>
+    new GenericInternalRow(Array[Any](id,
+      java.util.Arrays.copyOfRange(c.data, c.offs(i), c.offs(i + 1))))
 }
 
-/** row_meta(doc_ids, data, offsets, row_count) — lazy generator emitting one
-  * (doc_id, n_tok) row per encoded document, reading ONLY the packed id slab
-  * and each row's leading varint token count. No decode, no enc-slice copy:
-  * this is the metadata projection that drives planning-style operators
-  * (sequence packing, length stats, sampling manifests) off a compressed
-  * table at file-metadata cost — the chunk's `data` blob is touched for
-  * exactly rowCount varints (≤5 bytes each) at the row offsets.
+/** row_meta — one (doc_id, n_tok) row per encoded document, reading ONLY the
+  * packed id slab and each row's leading varint token count, through one
+  * reused row. No decode, no enc-slice copy: the metadata projection that
+  * drives planning-style operators (sequence packing, length stats,
+  * sampling manifests) off a compressed table — the chunk's `data` blob is
+  * touched for exactly rowCount varints (≤5 bytes each) at the row offsets.
   */
-case class RowMetaGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(docIds, data, offsets, rowCount)
+case class RowMetaGenerator(children: Seq[Expression]) extends DocRowsGenerator {
   override def elementSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("n_tok", IntegerType, nullable = false)))
   override def prettyName: String = "row_meta"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
+  override protected def kernel(c: ChunkRows): DocRows = {
     val out = new GenericInternalRow(2)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(p) & 0xff; p += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        out.update(0, UTF8String.fromBytes(ids, p, len))
-        p += len
-        // the row's encoding leads with its varint token count
-        var q = offs(i); var n = 0; shift = 0
-        do {
-          b = bytes(q) & 0xff; q += 1
-          n |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        out.setInt(1, n)
-        i += 1
-        out
-      }
+    (id, i, _) => {
+      // the row's encoding leads with its varint token count
+      var q = c.offs(i); var n = 0; var shift = 0; var b = 0
+      do {
+        b = c.data(q) & 0xff; q += 1
+        n |= (b & 0x7f) << shift; shift += 7
+      } while ((b & 0x80) != 0)
+      out.update(0, id)
+      out.setInt(1, n)
+      out
     }
   }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3))
 }
 
 /** Chunk-granularity token histogram: (token, count) pairs for one whole
@@ -693,59 +649,27 @@ case class BigramCountsGenerator(children: Seq[Expression])
     copy(children = cs)
 }
 
-/** content_hashes(doc_ids, data, offsets, row_count, symtab, codec) — lazy
-  * generator emitting one (doc_id, h1, h2) row per encoded document, where
+/** content_hashes — one (doc_id, h1, h2) row per encoded document, where
   * (h1, h2) is the 128-bit compressed-domain content hash of the row's
   * decoded token sequence (HashMatch kernels: FSST code-fragment streaming,
   * RLE closed-form run folds, dict/packed table loads — no decoded array
-  * ever materializes). Doc ids are zero-copy UTF8String views over the
-  * packed id slab; the only per-chunk allocation is 16 bytes/row of hash
+  * ever materializes). The only per-chunk allocation is 16 bytes/row of hash
   * lanes. Downstream groupBy(h1, h2) dedups exactly while shuffling 16-byte
   * keys instead of token payloads.
   */
-case class ContentHashesGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(docIds, data, offsets, rowCount, symtab, codec)
+case class ContentHashesGenerator(children: Seq[Expression]) extends DocRowsGenerator {
   override def elementSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("h1", LongType, nullable = false),
     StructField("h2", LongType, nullable = false)))
   override def prettyName: String = "content_hashes"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-    val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-    val (h1, h2) = HashMatch.chunkRowHashes(codecName, header, bytes, offs, rows)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(p) & 0xff; p += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        val id = UTF8String.fromBytes(ids, p, len)
-        p += len
-        val out = new GenericInternalRow(Array[Any](id, h1(i), h2(i)))
-        i += 1
-        out
-      }
-    }
+  override protected def kernel(c: ChunkRows): DocRows = {
+    val (h1, h2) = HashMatch.chunkRowHashes(c.codec, c.header, c.data, c.offs, c.rows)
+    (id, i, _) => new GenericInternalRow(Array[Any](id, h1(i), h2(i)))
   }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5))
 }
 
-/** minhash_rows(doc_ids, data, offsets, row_count, symtab, codec) — lazy
-  * generator emitting one (doc_id, grams?, sig) row per encoded document
+/** minhash_rows — one (doc_id, grams?, sig, n_tok) row per encoded document
   * with at least `shingleN` tokens, where sig is the k-permutation MinHash
   * signature and grams the sorted distinct shingle-hash set, both computed
   * by streaming the codec's wire format through a rolling window
@@ -757,366 +681,150 @@ case class ContentHashesGenerator(docIds: Expression, data: Expression,
   * With collectGrams=false the grams column is an empty array per row —
   * sig-only callers skip the O(n_tok) gram allocation entirely.
   */
-case class MinHashRowsGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression,
-    shingleN: Int, numHashes: Int, seed: Long, collectGrams: Boolean)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(docIds, data, offsets, rowCount, symtab, codec)
+case class MinHashRowsGenerator(children: Seq[Expression], shingleN: Int, numHashes: Int,
+                                seed: Long, collectGrams: Boolean) extends DocRowsGenerator {
   override def elementSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("grams", ArrayType(LongType, containsNull = false), nullable = false),
     StructField("sig", ArrayType(LongType, containsNull = false), nullable = false),
     StructField("n_tok", IntegerType, nullable = false)))
   override def prettyName: String = "minhash_rows"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-    val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-    val (grams, sigs, nToks) = MinHashMatch.chunkRowSigs(codecName, header, bytes,
-      offs, rows, shingleN, numHashes, seed, collectGrams)
+  override protected def kernel(c: ChunkRows): DocRows = {
+    val (grams, sigs, nToks) = MinHashMatch.chunkRowSigs(c.codec, c.header, c.data,
+      c.offs, c.rows, shingleN, numHashes, seed, collectGrams)
     val empty = UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      private var nextRow: InternalRow = advance()
-      private def advance(): InternalRow = {
-        while (i < rows) {
-          var len = 0; var shift = 0; var b = 0
-          do {
-            b = ids(p) & 0xff; p += 1
-            len |= (b & 0x7f) << shift; shift += 7
-          } while ((b & 0x80) != 0)
-          val id = UTF8String.fromBytes(ids, p, len)
-          p += len
-          val row = i
-          i += 1
-          if (nToks(row) >= shingleN) {
-            val g = if (collectGrams) UnsafeArrayData.fromPrimitiveArray(grams(row)) else empty
-            return new GenericInternalRow(Array[Any](id, g,
-              UnsafeArrayData.fromPrimitiveArray(sigs(row)), nToks(row)))
-          }
-        }
-        null
-      }
-      def hasNext: Boolean = nextRow != null
-      def next(): InternalRow = {
-        val out = nextRow
-        nextRow = advance()
-        out
+    new DocRows {
+      override def count(i: Int): Int = if (nToks(i) >= shingleN) 1 else 0
+      def row(id: UTF8String, i: Int, j: Int): InternalRow = {
+        val g = if (collectGrams) UnsafeArrayData.fromPrimitiveArray(grams(i)) else empty
+        new GenericInternalRow(Array[Any](id, g,
+          UnsafeArrayData.fromPrimitiveArray(sigs(i)), nToks(i)))
       }
     }
   }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5))
 }
 
-/** simhash_rows(doc_ids, data, offsets, row_count, symtab, codec) — lazy
-  * generator emitting one (doc_id, sig) row per encoded document, where sig
-  * is the 64-bit unigram SimHash computed by streaming the codec's wire
-  * format through the majority-vote accumulator (core/SimHashMatch) —
+/** simhash_rows — one (doc_id, sig) row per encoded document, where sig is
+  * the 64-bit unigram SimHash computed by streaming the codec's wire format
+  * through the majority-vote accumulator (core/SimHashMatch) —
   * bit-identical to SimHash64 on the decoded array, with no decoded array
   * in the plan. Every row is emitted (the decoded path applies no length
-  * filter; an empty row hashes to 0 on both paths). Doc ids are zero-copy
-  * UTF8String views over the packed id slab; the only per-chunk allocation
-  * is 8 bytes/row of signatures.
+  * filter; an empty row hashes to 0 on both paths).
   */
-case class SimHashRowsGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(docIds, data, offsets, rowCount, symtab, codec)
+case class SimHashRowsGenerator(children: Seq[Expression]) extends DocRowsGenerator {
   override def elementSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("sig", LongType, nullable = false)))
   override def prettyName: String = "simhash_rows"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-    val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-    val sigs = SimHashMatch.chunkRowSigs(codecName, header, bytes, offs, rows)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(p) & 0xff; p += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        val id = UTF8String.fromBytes(ids, p, len)
-        p += len
-        val out = new GenericInternalRow(Array[Any](id, sigs(i)))
-        i += 1
-        out
-      }
-    }
+  override protected def kernel(c: ChunkRows): DocRows = {
+    val sigs = SimHashMatch.chunkRowSigs(c.codec, c.header, c.data, c.offs, c.rows)
+    (id, i, _) => new GenericInternalRow(Array[Any](id, sigs(i)))
   }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5))
 }
 
-/** winnow_rows(doc_ids, data, offsets, row_count, symtab, codec) — lazy
-  * generator emitting one (doc_id, fingerprint) row per encoded document,
-  * where fingerprint is the winnowing document signature (k-gram rolling
-  * hashes, minimum per window of w, distinct sorted) computed by streaming
-  * the codec's wire format through core/WinnowMatch — bit-identical to
+/** winnow_rows — one (doc_id, fingerprint) row per encoded document, where
+  * fingerprint is the winnowing document signature (k-gram rolling hashes,
+  * minimum per window of w, distinct sorted) computed by streaming the
+  * codec's wire format through core/WinnowMatch — bit-identical to
   * WinnowFingerprint on the decoded array, with no decoded array in the
   * plan. Rows shorter than the gram length get an empty fingerprint, same
   * as the decoded expression (the downstream explode drops them).
   */
-case class WinnowRowsGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression,
-    k: Int, w: Int)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(docIds, data, offsets, rowCount, symtab, codec)
+case class WinnowRowsGenerator(children: Seq[Expression], k: Int, w: Int)
+    extends DocRowsGenerator {
   override def elementSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("fingerprint", ArrayType(LongType, containsNull = false), nullable = false)))
   override def prettyName: String = "winnow_rows"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-    val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-    val fps = WinnowMatch.chunkRowFingerprints(codecName, header, bytes, offs, rows, k, w)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(p) & 0xff; p += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        val id = UTF8String.fromBytes(ids, p, len)
-        p += len
-        val out = new GenericInternalRow(Array[Any](id,
-          UnsafeArrayData.fromPrimitiveArray(fps(i))))
-        i += 1
-        out
-      }
-    }
+  override protected def kernel(c: ChunkRows): DocRows = {
+    val fps = WinnowMatch.chunkRowFingerprints(c.codec, c.header, c.data, c.offs, c.rows, k, w)
+    (id, i, _) => new GenericInternalRow(Array[Any](id, UnsafeArrayData.fromPrimitiveArray(fps(i))))
   }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5))
 }
 
-/** span_blocks(doc_ids, data, offsets, row_count, symtab, codec) — lazy
-  * generator emitting one (doc_id, blk, h1, h2) row per non-overlapping
-  * k-token block of each encoded document, where (h1, h2) is the 128-bit
-  * polynomial block hash (core/SpanMatch, HashMatch's lanes) computed by
-  * streaming the codec's wire format — no decoded token array and no
-  * materialized block-content arrays in the plan. Trailing partial blocks
-  * are dropped, mirroring the decoded path.
+/** span_blocks — one (doc_id, blk, h1, h2) row per non-overlapping k-token
+  * block of each encoded document, where (h1, h2) is the 128-bit polynomial
+  * block hash (core/SpanMatch, HashMatch's lanes) computed by streaming the
+  * codec's wire format — no decoded token array and no materialized
+  * block-content arrays in the plan. Trailing partial blocks are dropped,
+  * mirroring the decoded path.
   */
-case class SpanBlocksGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression,
-    k: Int)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(docIds, data, offsets, rowCount, symtab, codec)
+case class SpanBlocksGenerator(children: Seq[Expression], k: Int) extends DocRowsGenerator {
   override def elementSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("blk", IntegerType, nullable = false),
     StructField("h1", LongType, nullable = false),
     StructField("h2", LongType, nullable = false)))
   override def prettyName: String = "span_blocks"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-    val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-    val (l1, l2) = SpanMatch.chunkRowBlocks(codecName, header, bytes, offs, rows, k)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var b = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      private var id: UTF8String = _
-      private def readId(): Unit = {
-        var len = 0; var shift = 0; var bb = 0
-        do {
-          bb = ids(p) & 0xff; p += 1
-          len |= (bb & 0x7f) << shift; shift += 7
-        } while ((bb & 0x80) != 0)
-        id = UTF8String.fromBytes(ids, p, len)
-        p += len
-      }
-      private def skipEmpty(): Unit = {
-        while (i < rows && b >= l1(i).length) {
-          i += 1; b = 0
-          if (i < rows) readId()
-        }
-      }
-      // prime: read row 0's id, then position on the first non-empty row
-      if (rows > 0) readId()
-      skipEmpty()
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        val out = new GenericInternalRow(Array[Any](id, b, l1(i)(b), l2(i)(b)))
-        b += 1
-        skipEmpty()
-        out
-      }
+  override protected def kernel(c: ChunkRows): DocRows = {
+    val (l1, l2) = SpanMatch.chunkRowBlocks(c.codec, c.header, c.data, c.offs, c.rows, k)
+    new DocRows {
+      override def count(i: Int): Int = l1(i).length
+      def row(id: UTF8String, i: Int, j: Int): InternalRow =
+        new GenericInternalRow(Array[Any](id, j, l1(i)(j), l2(i)(j)))
     }
   }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5))
 }
 
-/** set_counts(doc_ids, data, offsets, row_count, symtab, codec, min_tok,
-  * max_tok, bloom) — lazy generator emitting one (doc_id, n_tok, n_in_set)
-  * row per encoded document, where n_in_set counts the document's tokens
-  * that belong to the (sorted) literal set — blocklist density / rare-token
-  * scoring off compressed storage (core/SetCountMatch). The zone-map +
-  * bloom gate mirrors ChunkSetDocIds: a chunk that cannot contain any set
-  * member emits its rows at METADATA cost (id slab + each row's leading
-  * varint) with n_in_set = 0, never touching the data plane — at 100 TB a
-  * rare set prices the whole pass near the id-slab scan.
+/** set_counts — one (doc_id, n_tok, n_in_set) row per encoded document,
+  * where n_in_set counts the document's tokens that belong to the (sorted)
+  * literal set — blocklist density / rare-token scoring off compressed
+  * storage (core/SetCountMatch). Behind the zone-map + bloom gate
+  * ([[graft.core.SetMatch.chunkMayHit]], as in ChunkSetDocIds) a chunk that
+  * cannot contain any set member emits its rows at METADATA cost (id slab +
+  * each row's leading varint) with n_in_set = 0, never touching the data
+  * plane — at 100 TB a rare set prices the whole pass near the id-slab scan.
   */
-case class SetCountsGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression,
-    minTok: Expression, maxTok: Expression, bloom: Expression, tokens: Seq[Int])
-    extends Expression with Generator with CodegenFallback {
+case class SetCountsGenerator(children: Seq[Expression], tokens: Seq[Int])
+    extends DocRowsGenerator {
   private val sorted: Array[Int] = SetMatch.sortedSet(tokens.toArray)
-  override def children: Seq[Expression] =
-    Seq(docIds, data, offsets, rowCount, symtab, codec, minTok, maxTok, bloom)
   override def elementSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("n_tok", IntegerType, nullable = false),
     StructField("n_in_set", LongType, nullable = false)))
   override def prettyName: String = "set_counts"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val gated = !SetMatch.chunkOverlaps(sorted,
-        minTok.eval(input).asInstanceOf[Int], maxTok.eval(input).asInstanceOf[Int]) ||
-      !SetMatch.chunkMayContainAny(bloom.eval(input).asInstanceOf[Array[Byte]], sorted)
+  override protected def kernel(c: ChunkRows): DocRows = {
     val (counts, nToks) =
-      if (gated) (null: Array[Long], SetCountMatch.rowTokenCounts(bytes, offs, rows))
-      else {
-        val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-        val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-        SetCountMatch.chunkRowSetCounts(codecName, header, bytes, offs, rows, sorted)
-      }
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(p) & 0xff; p += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        val id = UTF8String.fromBytes(ids, p, len)
-        p += len
-        val out = new GenericInternalRow(Array[Any](id, nToks(i),
-          if (counts == null) 0L else counts(i)))
-        i += 1
-        out
-      }
-    }
+      if (!SetMatch.chunkMayHit(sorted, c.minTok, c.maxTok, c.bloom))
+        (null: Array[Long], SetCountMatch.rowTokenCounts(c.data, c.offs, c.rows))
+      else SetCountMatch.chunkRowSetCounts(c.codec, c.header, c.data, c.offs, c.rows, sorted)
+    (id, i, _) =>
+      new GenericInternalRow(Array[Any](id, nToks(i), if (counts == null) 0L else counts(i)))
   }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5), minTok = cs(6), maxTok = cs(7), bloom = cs(8))
 }
 
-/** token_pos(doc_ids, data, offsets, row_count, symtab, codec, min_tok,
-  * max_tok, bloom) — lazy generator emitting one (doc_id, n_tok, first_pos)
-  * row per encoded document, where first_pos is the 1-based position of the
-  * first occurrence of the target token (0 when absent) — the
-  * `array_position` / split-point-discovery primitive (first EOS, separator,
-  * special token) off compressed storage (core/PosMatch). The zone-map +
-  * bloom gate mirrors SetCountsGenerator with a single-token set: a chunk
-  * that cannot contain the target emits its rows at METADATA cost with
-  * first_pos = 0, never touching the data plane.
+/** token_pos — one (doc_id, n_tok, first_pos) row per encoded document,
+  * where first_pos is the 1-based position of the first occurrence of the
+  * target token (0 when absent) — the `array_position` /
+  * split-point-discovery primitive (first EOS, separator, special token) off
+  * compressed storage (core/PosMatch). The same gate as set_counts with a
+  * single-token set: a chunk that cannot contain the target emits its rows
+  * at METADATA cost with first_pos = 0, never touching the data plane.
   */
-case class TokenPosGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression,
-    minTok: Expression, maxTok: Expression, bloom: Expression, target: Int)
-    extends Expression with Generator with CodegenFallback {
-  private val sorted: Array[Int] = SetMatch.sortedSet(Array(target))
-  override def children: Seq[Expression] =
-    Seq(docIds, data, offsets, rowCount, symtab, codec, minTok, maxTok, bloom)
+case class TokenPosGenerator(children: Seq[Expression], target: Int) extends DocRowsGenerator {
+  private val sorted: Array[Int] = Array(target)
   override def elementSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("n_tok", IntegerType, nullable = false),
     StructField("first_pos", IntegerType, nullable = false)))
   override def prettyName: String = "token_pos"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val gated = !SetMatch.chunkOverlaps(sorted,
-        minTok.eval(input).asInstanceOf[Int], maxTok.eval(input).asInstanceOf[Int]) ||
-      !SetMatch.chunkMayContainAny(bloom.eval(input).asInstanceOf[Array[Byte]], sorted)
+  override protected def kernel(c: ChunkRows): DocRows = {
     val (poss, nToks) =
-      if (gated) (null: Array[Int], SetCountMatch.rowTokenCounts(bytes, offs, rows))
-      else {
-        val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-        val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-        PosMatch.chunkFirstPositions(codecName, header, bytes, offs, rows, target)
-      }
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(p) & 0xff; p += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        val id = UTF8String.fromBytes(ids, p, len)
-        p += len
-        val out = new GenericInternalRow(Array[Any](id, nToks(i),
-          if (poss == null) 0 else poss(i)))
-        i += 1
-        out
-      }
-    }
+      if (!SetMatch.chunkMayHit(sorted, c.minTok, c.maxTok, c.bloom))
+        (null: Array[Int], SetCountMatch.rowTokenCounts(c.data, c.offs, c.rows))
+      else PosMatch.chunkFirstPositions(c.codec, c.header, c.data, c.offs, c.rows, target)
+    (id, i, _) =>
+      new GenericInternalRow(Array[Any](id, nToks(i), if (poss == null) 0 else poss(i)))
   }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5), minTok = cs(6), maxTok = cs(7), bloom = cs(8))
 }
 
-/** quality_profiles(doc_ids, data, offsets, row_count, symtab, codec) —
-  * lazy generator emitting one (doc_id, n_tok, n_distinct, max_run, top_cnt)
-  * row per encoded document: the token-domain quality profile (exact
-  * distinct count, longest equal-token run, mode weight) computed in each
-  * codec's wire format (core/QualityMatch) — a C4/Gopher-style quality gate
-  * over a compressed corpus without decoding a single token array.
+/** quality_profiles — one (doc_id, n_tok, n_distinct, max_run, top_cnt) row
+  * per encoded document: the token-domain quality profile (exact distinct
+  * count, longest equal-token run, mode weight) computed in each codec's
+  * wire format (core/QualityMatch) — a C4/Gopher-style quality gate over a
+  * compressed corpus without decoding a single token array.
   */
-case class QualityGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] =
-    Seq(docIds, data, offsets, rowCount, symtab, codec)
+case class QualityGenerator(children: Seq[Expression]) extends DocRowsGenerator {
   override def elementSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("n_tok", IntegerType, nullable = false),
@@ -1124,35 +832,9 @@ case class QualityGenerator(docIds: Expression, data: Expression,
     StructField("max_run", IntegerType, nullable = false),
     StructField("top_cnt", IntegerType, nullable = false)))
   override def prettyName: String = "quality_profiles"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-    val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-    val p = QualityMatch.chunkRowProfiles(codecName, header, bytes, offs, rows)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var pos = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(pos) & 0xff; pos += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        val id = UTF8String.fromBytes(ids, pos, len)
-        pos += len
-        val out = new GenericInternalRow(Array[Any](id, p.nTok(i),
-          p.nDistinct(i), p.maxRun(i), p.topCnt(i)))
-        i += 1
-        out
-      }
-    }
+  override protected def kernel(c: ChunkRows): DocRows = {
+    val p = QualityMatch.chunkRowProfiles(c.codec, c.header, c.data, c.offs, c.rows)
+    (id, i, _) => new GenericInternalRow(Array[Any](id, p.nTok(i),
+      p.nDistinct(i), p.maxRun(i), p.topCnt(i)))
   }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5))
 }

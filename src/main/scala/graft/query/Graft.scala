@@ -33,22 +33,9 @@ object PushPatternIntoCompressed extends Rule[LogicalPlan] {
     // size(tokens) on the encoded view reads the prefix instead of decoding
     case org.apache.spark.sql.catalyst.expressions.Size(DecodeRow(enc, _, _), _) =>
       RowTokenCount(enc)
-    // head pushdown: every codec's payload is prefix-structured, so
-    // slice(tokens, 1, k) decodes only the first k tokens of each row
-    case org.apache.spark.sql.catalyst.expressions.Slice(DecodeRow(enc, header, codec),
-        org.apache.spark.sql.catalyst.expressions.IntegerLiteral(1),
-        org.apache.spark.sql.catalyst.expressions.IntegerLiteral(k)) if k >= 0 =>
-      DecodeHead(enc, header, codec, k)
-    // tail pushdown: slice(tokens, −k, k) = the last k tokens (empty when
-    // the row is shorter — builtin semantics), decoded by skipping to the
-    // cut in the code/bit stream
-    case org.apache.spark.sql.catalyst.expressions.Slice(DecodeRow(enc, header, codec),
-        org.apache.spark.sql.catalyst.expressions.IntegerLiteral(s),
-        org.apache.spark.sql.catalyst.expressions.IntegerLiteral(k)) if s < 0 && k == -s =>
-      DecodeTail(enc, header, codec, k)
-    // general mid-window pushdown: slice(tokens, s, k) for any other nonzero
-    // literal start decodes O(skip + k) per row (s == 0 / k < 0 raise in the
-    // builtin at runtime — leave those to it)
+    // window pushdown: slice(tokens, s, k) for any nonzero literal start —
+    // heads (1, k), tails (−k, k) and mid windows — decodes O(skip + k) per
+    // row (s == 0 / k < 0 raise in the builtin at runtime — leave those to it)
     case org.apache.spark.sql.catalyst.expressions.Slice(DecodeRow(enc, header, codec),
         org.apache.spark.sql.catalyst.expressions.IntegerLiteral(s),
         org.apache.spark.sql.catalyst.expressions.IntegerLiteral(k)) if s != 0 && k >= 0 =>
@@ -62,7 +49,7 @@ object PushPatternIntoCompressed extends Rule[LogicalPlan] {
     * twice, so `slice(tokens, 1, k)` + `slice(tokens, −k, k)` over the
     * encoded view keeps `decode_row(…) AS tokens` in a lower Project and the
     * slices see only the attribute. This case substitutes the decode alias
-    * into REWRITABLE uses only (slice-head/tail, size) — sound duplication,
+    * into REWRITABLE uses only (slice, size) — sound duplication,
     * because each substituted use immediately rewrites to a partial/prefix
     * read strictly cheaper than the shared full decode — and leaves every
     * other use on the shared alias untouched. The lower Project grows
@@ -85,14 +72,6 @@ object PushPatternIntoCompressed extends Rule[LogicalPlan] {
           d
         }
         val newParent = parentList.map(_.transform {
-          case Slice(ar: AttributeReference, IntegerLiteral(1), IntegerLiteral(k))
-              if k >= 0 && decodeAliases.contains(ar.exprId) =>
-            val d = bind(ar)
-            DecodeHead(d.enc, d.header, d.codecName, k)
-          case Slice(ar: AttributeReference, IntegerLiteral(s), IntegerLiteral(k))
-              if s < 0 && k == -s && decodeAliases.contains(ar.exprId) =>
-            val d = bind(ar)
-            DecodeTail(d.enc, d.header, d.codecName, k)
           case Slice(ar: AttributeReference, IntegerLiteral(s), IntegerLiteral(k))
               if s != 0 && k >= 0 && decodeAliases.contains(ar.exprId) =>
             val d = bind(ar)
@@ -182,10 +161,13 @@ object Graft {
       es => TokenSetMatch(es.head, litInts(es(1))), "scala_udf")
     reg.createOrReplaceTempFunction("decode_row",
       es => DecodeRow(es(0), es(1), es(2)), "scala_udf")
+    // head = window (1, k), tail = window (−k, k); k ≤ 0 is the empty window
     reg.createOrReplaceTempFunction("decode_head",
-      es => DecodeHead(es(0), es(1), es(2), litInt(es(3))), "scala_udf")
-    reg.createOrReplaceTempFunction("decode_tail",
-      es => DecodeTail(es(0), es(1), es(2), litInt(es(3))), "scala_udf")
+      es => DecodeSlice(es(0), es(1), es(2), 1, math.max(litInt(es(3)), 0)), "scala_udf")
+    reg.createOrReplaceTempFunction("decode_tail", es => {
+      val k = litInt(es(3))
+      if (k > 0) DecodeSlice(es(0), es(1), es(2), -k, k) else DecodeSlice(es(0), es(1), es(2), 1, 0)
+    }, "scala_udf")
     reg.createOrReplaceTempFunction("decode_slice",
       es => DecodeSlice(es(0), es(1), es(2), litInt(es(3)), litInt(es(4))), "scala_udf")
     reg.createOrReplaceTempFunction("cosine_sim",
@@ -247,6 +229,12 @@ object Graft {
 
   // --- views over the chunk table -------------------------------------------
 
+  /** A per-document generator over the named prefix of
+    * [[DocRowsGenerator.columns]].
+    */
+  private def docRows(columns: Seq[String])(gen: Seq[Expression] => Expression): Column =
+    mkCol(gen(columns.map(c => col2expr(col(c)))))
+
   /** Per-document view of an encoded chunk table WITHOUT decoding: columns
     * (doc_id, source, enc, symtab, codec) + a logical `tokens` column defined
     * as decode_row(enc). Filters written against `tokens` with the functions
@@ -256,8 +244,7 @@ object Graft {
   def encodedRows(chunks: DataFrame): DataFrame = {
     chunks
       .select(col("codec"), col("symtab"), col("source"),
-        mkCol(EncodedRowsGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-          col2expr(col("offsets")), col2expr(col("row_count")))))
+        docRows(DocRowsGenerator.slabs)(EncodedRowsGenerator(_)))
       .select(col("doc_id"), col("source"), col("enc"), col("symtab"), col("codec"))
       .withColumn("tokens", decodeRow(col("enc"), col("symtab"), col("codec")))
   }
@@ -274,8 +261,7 @@ object Graft {
   def rowMeta(chunks: DataFrame): DataFrame = {
     chunks
       .select(col("source"),
-        mkCol(RowMetaGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-          col2expr(col("offsets")), col2expr(col("row_count")))))
+        docRows(DocRowsGenerator.slabs)(RowMetaGenerator(_)))
       .select(col("doc_id"), col("source"), col("n_tok"))
   }
 
@@ -287,9 +273,7 @@ object Graft {
   def contentHashes(chunks: DataFrame): DataFrame = {
     chunks
       .select(col("source"),
-        mkCol(ContentHashesGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-          col2expr(col("offsets")), col2expr(col("row_count")),
-          col2expr(col("symtab")), col2expr(col("codec")))))
+        docRows(DocRowsGenerator.coded)(ContentHashesGenerator(_)))
       .select(col("doc_id"), col("source"), col("h1"), col("h2"))
   }
 
@@ -317,10 +301,8 @@ object Graft {
   def minhashRowsEncoded(chunks: DataFrame, shingleN: Int, numHashes: Int,
                          seed: Long, collectGrams: Boolean = true): DataFrame =
     chunks.select(
-      mkCol(MinHashRowsGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")),
-        shingleN, numHashes, seed, collectGrams)))
+      docRows(DocRowsGenerator.coded)(
+        MinHashRowsGenerator(_, shingleN, numHashes, seed, collectGrams)))
 
   /** MinHash + LSH near-duplicate pairs over the ENCODED table: signatures
     * stream off the compressed chunks (MinHashMatch), then the banding +
@@ -341,9 +323,7 @@ object Graft {
     */
   def simhashRowsEncoded(chunks: DataFrame): DataFrame =
     chunks.select(
-      mkCol(SimHashRowsGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")))))
+      docRows(DocRowsGenerator.coded)(SimHashRowsGenerator(_)))
 
   /** SimHash near-duplicate pairs over the ENCODED table: signatures stream
     * off the compressed chunks (SimHashMatch), then banding + exact-Hamming
@@ -360,9 +340,7 @@ object Graft {
     */
   def winnowRowsEncoded(chunks: DataFrame, k: Int, w: Int): DataFrame =
     chunks.select(
-      mkCol(WinnowRowsGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")), k, w)))
+      docRows(DocRowsGenerator.coded)(WinnowRowsGenerator(_, k, w)))
 
   /** Fingerprint-sharing pairs over the ENCODED table: winnowing signatures
     * stream off the compressed chunks (WinnowMatch), then the explode +
@@ -381,9 +359,7 @@ object Graft {
     */
   def spanBlocksEncoded(chunks: DataFrame, k: Int): DataFrame =
     chunks.select(
-      mkCol(SpanBlocksGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")), k)))
+      docRows(DocRowsGenerator.coded)(SpanBlocksGenerator(_, k)))
 
   /** C4-style duplicate-span detection over the ENCODED table: block keys
     * are 128-bit hashes streamed off the compressed chunks (SpanMatch), the
@@ -403,10 +379,8 @@ object Graft {
     */
   def gramRowsEncoded(chunks: DataFrame, shingleN: Int): DataFrame =
     chunks.select(col("source"),
-      mkCol(MinHashRowsGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")),
-        shingleN, 0, 0L, collectGrams = true)))
+      docRows(DocRowsGenerator.coded)(
+        MinHashRowsGenerator(_, shingleN, 0, 0L, collectGrams = true)))
       .select(col("doc_id"), col("source"), col("grams"))
 
   /** Exact n-gram Jaccard pairs over the ENCODED table: distinct shingle
@@ -536,11 +510,7 @@ object Graft {
     */
   def setCountsEncoded(chunks: DataFrame, set: Seq[Int]): DataFrame =
     chunks.select(
-      mkCol(SetCountsGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")),
-        col2expr(col("stats.min_tok")), col2expr(col("stats.max_tok")),
-        col2expr(col("stats.symbol_bitmap")), set)))
+      docRows(DocRowsGenerator.gated)(SetCountsGenerator(_, set)))
 
   /** Per-document FIRST POSITION of a target token over the encoded table:
     * (doc_id, n_tok, first_pos) with first_pos the 1-based position of the
@@ -553,11 +523,7 @@ object Graft {
     */
   def firstPosEncoded(chunks: DataFrame, target: Int): DataFrame =
     chunks.select(
-      mkCol(TokenPosGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")),
-        col2expr(col("stats.min_tok")), col2expr(col("stats.max_tok")),
-        col2expr(col("stats.symbol_bitmap")), target)))
+      docRows(DocRowsGenerator.gated)(TokenPosGenerator(_, target)))
 
   /** Per-document token-quality profile over the encoded table: (doc_id,
     * source, n_tok, n_distinct, max_run, top_cnt) — exact distinct-token
@@ -571,9 +537,7 @@ object Graft {
     */
   def qualityEncoded(chunks: DataFrame): DataFrame =
     chunks.select(col("source"),
-      mkCol(QualityGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")))))
+      docRows(DocRowsGenerator.coded)(QualityGenerator(_)))
       .select(col("doc_id"), col("source"), col("n_tok"),
         col("n_distinct"), col("max_run"), col("top_cnt"))
 
@@ -645,7 +609,6 @@ object Graft {
     import graft.core.{PatternMatch, RowPredicate}
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
-    import org.apache.spark.unsafe.types.UTF8String
     val spark = chunkDf.sparkSession
     val normalized = graft.core.PatternMode.normalize(mode, parts.map(_.toArray).toArray)
     val proj = lateMatProjection(chunkDf, parts)
@@ -666,35 +629,15 @@ object Graft {
           val docIds = r.getBinary(5)
           val source = r.getUTF8String(6).clone()
           val dec = graft.core.Codecs.byName(codec).decoder(symtab)
+          val ids = graft.format.PackedIds.cursor(docIds)
           new Iterator[InternalRow] {
             private var i = 0
-            private var idPos = 0
-            private var idAt = 0 // row index the id cursor sits on
-            private def idOf(row: Int): UTF8String = {
-              // sequential cursor over the packed slab; rows only move forward
-              while (idAt < row) {
-                var len = 0; var shift = 0; var b = 0
-                do {
-                  b = docIds(idPos) & 0xff; idPos += 1
-                  len |= (b & 0x7f) << shift; shift += 7
-                } while ((b & 0x80) != 0)
-                idPos += len
-                idAt += 1
-              }
-              var len = 0; var shift = 0; var b = 0
-              var p = idPos
-              do {
-                b = docIds(p) & 0xff; p += 1
-                len |= (b & 0x7f) << shift; shift += 7
-              } while ((b & 0x80) != 0)
-              UTF8String.fromBytes(docIds, p, len)
-            }
             private def advance(): Unit =
-              while (i < rowCount && !matches(data, offs(i), offs(i + 1))) i += 1
+              while (i < rowCount && !matches(data, offs(i), offs(i + 1))) { ids.skip(); i += 1 }
             advance()
             def hasNext: Boolean = i < rowCount
             def next(): InternalRow = {
-              val id = idOf(i)
+              val id = ids.next()
               val toks = dec.decode(data, offs(i), offs(i + 1))
               i += 1
               advance()

@@ -350,7 +350,7 @@ object PlanAudit {
       println("zone gate: stats.min_tok/max_tok in PushedFilters for " +
         "pattern/range/set scans and late materialization")
     }
-    println("=== [16] round-5 projection algebra: head/tail partial decode, truncate plan ===")
+    println("=== [16] round-5 projection algebra: head/tail window decode, truncate plan ===")
     locally {
       // head + tail + length in ONE projection over the shared decode alias:
       // CollapseProject refuses to inline a non-cheap alias used repeatedly,
@@ -361,10 +361,10 @@ object PlanAudit {
         expr("slice(tokens, -8, 8)").as("tail"),
         size(col("tokens")).as("n"))
       val p = q.queryExecution.optimizedPlan.toString
-      require(p.contains("decode_head") && p.contains("decode_tail") &&
+      require("decode_slice".r.findAllMatchIn(p).size == 2 &&
         p.contains("row_token_count") && !p.contains("decode_row"),
         s"head/tail/length over one shared alias must all push; no decode_row:\n$p")
-      println("projection: decode_head + decode_tail + row_token_count, decode_row pruned")
+      println("projection: 2× decode_slice + row_token_count, decode_row pruned")
 
       // truncation: a per-chunk typed map like scrub — zero exchanges
       val trp = graft.encode.Truncate.truncate(chunks, 48).toDF()

@@ -168,4 +168,64 @@ class CodecSpec extends AnyFunSuite {
       PackedIds.unpackAll(PackedIds.pack(l.toArray), l.length).toSeq == l
     })
   }
+
+  test("packed id cursor: next, skip and nextString across one- and two-byte length varints") {
+    import graft.format.PackedIds
+    // 0, 1, 127, 128 and 300 UTF-8 bytes; the last three mix in multi-byte
+    // characters, and 128+ bytes take a two-byte length varint
+    val ids = Array("", "x", "é" * 63 + "a", "日" * 42 + "ab", "😀" * 75, "doc-7")
+    assert(ids.map(_.getBytes("UTF-8").length).toSeq == Seq(0, 1, 127, 128, 300, 5))
+    val packed = PackedIds.pack(ids)
+    val all = PackedIds.cursor(packed)
+    assert(ids.map(_ => all.next().toString).toSeq == ids.toSeq)
+    assert(all.pos == packed.length)
+    // every skip pattern lands on the same records as a full walk
+    for (mask <- 0 until (1 << ids.length)) {
+      val c = PackedIds.cursor(packed)
+      ids.indices.foreach { i =>
+        if ((mask >> i & 1) == 0) c.skip()
+        else if (i % 2 == 0) assert(c.next().toString == ids(i))
+        else assert(c.nextString() == ids(i))
+      }
+      assert(c.pos == packed.length)
+    }
+  }
+
+  test("an unknown codec name fails typed at every codec dispatch") {
+    val rows = IndexedSeq(Array(3, 1, 4, 1, 5), Array(9, 2, 6))
+    val header = RawCodec.buildHeader(rows, ChunkStats.compute(rows))
+    val out = new ByteWriter()
+    val offs = new Array[Int](rows.length + 1)
+    val enc = RawCodec.encoder(header)
+    rows.zipWithIndex.foreach { case (r, i) => enc.encode(r, out); offs(i + 1) = out.size }
+    val data = out.toBytes
+    val sink = new TokenSink {
+      def rowStart(row: Int, n: Int): Unit = ()
+      def feed(t: Int): Unit = ()
+      def rowEnd(row: Int): Unit = ()
+    }
+    val zstd = "zstd"
+    val calls: Seq[(String, () => Any)] = Seq(
+      "Codecs.byName" -> (() => Codecs.byName(zstd)),
+      "ChunkWalker.walk" -> (() => ChunkWalker.walk(zstd, header, data, offs, rows.length, sink)),
+      "SliceDecode.decoder" -> (() => SliceDecode.decoder(zstd, header)),
+      "CountMatch.chunkCounts" -> (() => CountMatch.chunkCounts(zstd, header, data, offs, rows.length, 1, 9)),
+      "CountMatch.chunkCountsAuto (sorted fold)" ->
+        (() => CountMatch.chunkCountsAuto(zstd, header, data, offs, rows.length, 0, Int.MaxValue)),
+      "CountMatch.chunkBigrams" -> (() => CountMatch.chunkBigrams(zstd, header, data, offs, rows.length, 1, 9)),
+      "CountMatch.chunkBigramsAuto (sorted fold)" ->
+        (() => CountMatch.chunkBigramsAuto(zstd, header, data, offs, rows.length, 0, Int.MaxValue)),
+      "HashMatch.chunkRowHashes" -> (() => HashMatch.chunkRowHashes(zstd, header, data, offs, rows.length)),
+      "RangeMatch.prepare" -> (() => RangeMatch.prepare(zstd, header, 1, 4)),
+      "SetMatch.prepare" -> (() => SetMatch.prepare(zstd, header, Array(2, 6))),
+      "PatternMatch.prepare" ->
+        (() => PatternMatch.prepare(zstd, header, PatternMode.Contains, Array(Array(1, 5)), null)),
+      "ChunkOps.build forceCodec" -> (() => graft.format.ChunkOps.build(0L, 0, Array("a", "b"), "src",
+        TokenRows.ofArrays(rows), Some(zstd))))
+    for ((name, call) <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("'zstd'") && e.getMessage.contains("fsst"),
+        s"$name: ${e.getMessage}")
+    }
+  }
 }

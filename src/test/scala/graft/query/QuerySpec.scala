@@ -308,11 +308,11 @@ class QuerySpec extends AnyFunSuite {
     }
   }
 
-  test("quality profile: per-codec compressed-domain stats equal the decoded oracle") {
-    import org.apache.spark.sql.functions.expr
-    // decoded-domain oracle built from higher-order functions on the raw
-    // token arrays: exact distinct count, longest equal-adjacent run
-    // (aggregate carrying (prev, run, best)), and mode weight
+  /** Decoded-domain quality profile built from higher-order functions on
+    * the raw token arrays: exact distinct count, longest equal-adjacent run
+    * (aggregate carrying (prev, run, best)), and mode weight.
+    */
+  private def qualityOracle(docs: DataFrame): DataFrame = {
     val maxRunExpr = expr(
       "aggregate(tokens, named_struct('prev', CAST(NULL AS INT), 'run', 0, 'best', 0), " +
         "(s, t) -> named_struct('prev', t, " +
@@ -322,11 +322,15 @@ class QuerySpec extends AnyFunSuite {
     val topCntExpr = expr(
       "coalesce(array_max(transform(array_distinct(tokens), " +
         "d -> size(filter(tokens, t -> t = d)))), 0)")
-    val want = input.toDF().select(col("doc_id"),
+    docs.select(col("doc_id"),
       size(col("tokens")).cast("int").as("n_tok"),
       size(array_distinct(col("tokens"))).cast("int").as("n_distinct"),
       maxRunExpr.cast("int").as("max_run"),
       topCntExpr.cast("int").as("top_cnt"))
+  }
+
+  test("quality profile: per-codec compressed-domain stats equal the decoded oracle") {
+    val want = qualityOracle(input.toDF())
     for (codec <- Seq("fsst", "dict", "rle", "for", "bitpack", "raw")) {
       val ch = EncodeJob.encode(input,
         EncodeOptions(numBuckets = 4, maxRowsPerChunk = 64, forceCodec = Some(codec))).toDF()
@@ -779,12 +783,12 @@ class QuerySpec extends AnyFunSuite {
       assert(want.except(got).isEmpty && got.except(want).isEmpty,
         s"$codecName: head/tail projection differs from decoded-domain slice")
     }
-    // the rewrites must fire: decode_head + decode_tail, no decode_row
+    // the rewrites must fire: one decode_slice window each, no decode_row
     val q = Graft.encodedRows(chunks)
       .select(expr(s"slice(tokens, 1, $k)"), expr(s"slice(tokens, -$kt, $kt)"))
     val optimized = q.queryExecution.optimizedPlan.toString()
-    assert(optimized.contains("decode_head") && optimized.contains("decode_tail"),
-      s"expected decode_head and decode_tail in optimized plan:\n$optimized")
+    assert("decode_slice".r.findAllMatchIn(optimized).size == 2,
+      s"expected two decode_slice windows in optimized plan:\n$optimized")
     assert(!optimized.contains("decode_row"),
       s"decode_row should have been eliminated by the head/tail rewrites:\n$optimized")
     // SQL surface: the registered functions agree with the column API
@@ -794,6 +798,15 @@ class QuerySpec extends AnyFunSuite {
          |       decode_tail(enc, symtab, codec, $kt) AS tail FROM __head_view""".stripMargin)
     assert(want.except(viaSql).isEmpty && viaSql.except(want).isEmpty,
       "SQL decode_head/decode_tail differ from the column-API slices")
+    // k ≤ 0 is the empty window for both functions, on every row
+    for (k0 <- Seq(0, -3)) {
+      val sizes = spark.sql(
+        s"""SELECT size(decode_head(enc, symtab, codec, $k0)) AS h,
+           |       size(decode_tail(enc, symtab, codec, $k0)) AS t FROM __head_view""".stripMargin)
+        .collect()
+      assert(sizes.length == input.count() && sizes.forall(r => r.getInt(0) == 0 && r.getInt(1) == 0),
+        s"decode_head/decode_tail at k = $k0 must return empty arrays")
+    }
   }
 
   test("sentinel injection: affix rewrites per codec, decode equals bos ++ tokens ++ eos") {
@@ -958,6 +971,82 @@ class QuerySpec extends AnyFunSuite {
     val plan = gotAuto.queryExecution.optimizedPlan.toString()
     assert(plan.contains("row_meta"), plan)
     assert(!plan.contains("decode_row"), plan)
+  }
+
+  test("doc ids of 0 to 300 UTF-8 bytes survive every read of the id slab, per codec") {
+    import spark.implicits._
+    // 0, 1, 127, 128 and 300 UTF-8 bytes (multi-byte characters in the
+    // long ones; 128+ bytes take a two-byte length varint) among plain ids.
+    // Docs i and i + 6 share their tokens, so every dedup path pairs the
+    // long ids with plain ones; docs 5 and 11 are shorter than any shingle,
+    // so generators that drop short rows skip ids mid-chunk.
+    val ids = Seq("", "x", "é" * 63 + "a", "日" * 42 + "ab", "😀" * 75, "s",
+      "p0", "p1", "p2", "p3", "p4", "p5")
+    assert(ids.take(5).map(_.getBytes("UTF-8").length) == Seq(0, 1, 127, 128, 300))
+    val base = Seq(
+      Array(5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16, 17, 18),
+      Array(20, 21, 22, 23, 24, 25, 26, 27, 28, 29, 30, 31, 5, 6),
+      Array(7, 7, 7, 7, 40, 41, 42, 43, 44, 45, 46, 47, 48, 49, 7, 7),
+      Array(50, 51, 52, 53, 54, 55, 56, 57, 58, 59, 60, 61, 62, 63, 64),
+      Array(8, 9, 10, 11, 12, 70, 71, 72, 73, 74, 75, 76, 77, 78, 79, 80),
+      Array(90, 91))
+    val toks = base ++ base.init :+ Array(92)
+    val docs = ids.zip(toks).zipWithIndex.map { case ((id, t), i) =>
+      graft.format.TokenRow(id, t, t.length, if (i % 2 == 0) "web" else "code")
+    }.toDS()
+    val raw = docs.toDF()
+    def same(what: String, want: DataFrame, got: DataFrame): Unit =
+      assert(want.except(got).isEmpty && got.except(want).isEmpty, what)
+    val pattern = Seq(8, 9, 10)
+    val isBench = (id: org.apache.spark.sql.Column) => octet_length(id) > 100
+    for (codec <- Seq("fsst", "dict", "rle")) {
+      val ch = EncodeJob.encode(docs,
+        EncodeOptions(numBuckets = 2, maxRowsPerChunk = 4, forceCodec = Some(codec))).cache().toDF()
+      same(s"$codec encodedRows", raw.select("doc_id", "tokens"),
+        Graft.encodedRows(ch).select("doc_id", "tokens"))
+      same(s"$codec rowMeta", raw.select(col("doc_id"), col("source"), size(col("tokens")).as("n_tok")),
+        Graft.rowMeta(ch))
+      same(s"$codec exact dedup",
+        raw.groupBy("tokens").agg(min("doc_id").as("rep"), count(lit(1)).as("n")).select("rep", "n"),
+        Graft.contentHashes(ch).groupBy("h1", "h2")
+          .agg(min("doc_id").as("rep"), count(lit(1)).as("n")).select("rep", "n"))
+      same(s"$codec minhash pairs", graft.pipeline.Dedup.minhashLshPairs(raw, tau = 0.7),
+        Graft.dedupMinhashEncoded(ch, tau = 0.7))
+      assert(Graft.dedupMinhashEncoded(ch, tau = 0.7).count() >= 5, s"$codec: planted pairs missing")
+      same(s"$codec simhash pairs", graft.pipeline.Dedup.simhashPairs(raw, maxHamming = 3),
+        Graft.dedupSimhashEncoded(ch, maxHamming = 3))
+      same(s"$codec winnowing pairs", graft.pipeline.TextAnalysis.fingerprintPairs(raw),
+        Graft.fingerprintPairsEncoded(ch))
+      same(s"$codec span duplicates", graft.pipeline.Dedup.spanDuplicates(raw, k = 4),
+        Graft.spanDuplicatesEncoded(ch, k = 4))
+      same(s"$codec n-gram Jaccard pairs", graft.pipeline.Dedup.ngramJaccardPairs(raw, n = 3, minInter = 3),
+        Graft.ngramJaccardPairsEncoded(ch, n = 3, minInter = 3))
+      same(s"$codec repetition scores", graft.pipeline.TextAnalysis.repetitionScores(raw, n = 3),
+        Graft.repetitionScoresEncoded(ch, n = 3))
+      same(s"$codec decontamination",
+        graft.pipeline.Dedup.benchmarkOverlap(raw.filter(!isBench(col("doc_id"))),
+          raw.filter(isBench(col("doc_id"))), n = 3, minShared = 1),
+        Graft.benchmarkOverlapEncoded(ch, n = 3, minShared = 1, isBench))
+      same(s"$codec quality", qualityOracle(raw),
+        Graft.qualityEncoded(ch).select("doc_id", "n_tok", "n_distinct", "max_run", "top_cnt"))
+      // a present set and an absent one (the gated, metadata-only path)
+      for (set <- Seq(Seq(7, 91), Seq(500, 501))) same(s"$codec set counts $set",
+        raw.select(col("doc_id"), size(col("tokens")).cast("int").as("n_tok"),
+          expr(s"aggregate(tokens, 0L, (a, t) -> a + IF(array_contains(" +
+            s"array(${set.mkString(",")}), t), 1L, 0L))").as("n_in_set")),
+        Graft.setCountsEncoded(ch, set))
+      for (t <- Seq(9, 500)) same(s"$codec first position $t",
+        raw.select(col("doc_id"), size(col("tokens")).cast("int").as("n_tok"),
+          expr(s"CAST(array_position(tokens, $t) AS INT)").as("first_pos")),
+        Graft.firstPosEncoded(ch, t))
+      same(s"$codec scanPattern", raw.filter(Graft.containsTokens(col("tokens"), pattern)).select("doc_id"),
+        Graft.scanPattern(ch, PatternMode.Contains, Seq(pattern)))
+      same(s"$codec late decode", raw.filter(Graft.containsTokens(col("tokens"), pattern)),
+        Graft.scanAndDecodeDf(ch, PatternMode.Contains, Seq(pattern))
+          .select("doc_id", "tokens", "n_tok", "source"))
+      same(s"$codec decodeDf", raw,
+        EncodeJob.decodeDf(ch).select("doc_id", "tokens", "n_tok", "source"))
+    }
   }
 
   test("packing plans and sampling decode off the encoded table (late-materialized sample)") {

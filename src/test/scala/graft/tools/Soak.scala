@@ -512,8 +512,9 @@ object Soak {
         }, 2000)
     }
 
-    // read-side head projection: partial decode of the first k tokens must
-    // equal full-decode + take for every codec, on the same encoded bytes
+    // read-side head/tail projections as slice windows: (1, k) must equal
+    // full-decode + take, (−k, k) full-decode + takeRight (empty when the
+    // row is shorter), for every codec on the same encoded bytes
     for (codec <- Codecs.all) {
       check(s"head-vs-oracle-${codec.name}",
         Prop.forAll(Gen.listOfN(15, genToks), Gen.choose(0, 80)) { (rowsL, k) =>
@@ -529,17 +530,19 @@ object Soak {
             val offs = new Array[Int](rows.length + 1)
             rows.zipWithIndex.foreach { case (r, i) => enc.encode(r, out); offs(i + 1) = out.size }
             val data = out.toBytes
-            val hd = HeadDecode.decoder(codec.name, header)
-            val td = TailDecode.decoder(codec.name, header)
+            val sd = SliceDecode.decoder(codec.name, header)
             rows.indices.forall { i =>
               // tail oracle = builtin slice(arr, −k, k): EMPTY when the row
               // is shorter than k
               val wantTail =
                 if (rows(i).length >= k) rows(i).takeRight(k) else Array.emptyIntArray
+              // k = 0 has no negative start: decode_tail's empty window (1, 0)
+              val tail =
+                if (k > 0) sd.decodeSlice(data, offs(i), offs(i + 1), -k, k)
+                else sd.decodeSlice(data, offs(i), offs(i + 1), 1, 0)
               java.util.Arrays.equals(
-                hd.decodeHead(data, offs(i), offs(i + 1), k), rows(i).take(k)) &&
-                java.util.Arrays.equals(
-                  td.decodeTail(data, offs(i), offs(i + 1), k), wantTail)
+                sd.decodeSlice(data, offs(i), offs(i + 1), 1, k), rows(i).take(k)) &&
+                java.util.Arrays.equals(tail, wantTail)
             }
           }
         }, 2000)
